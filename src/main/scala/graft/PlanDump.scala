@@ -32,12 +32,13 @@ object PlanDump {
       // (and still reach spark.stop()), not abort the remaining dumps.
       try {
         val df = Registry.byName(name).run(spark, sfDir)
-        // GRAFT_PLAN_EXEC=1: execute the plan first (noop-equivalent count,
-        // result discarded) so the dump shows the FINAL adaptive plan —
+        // GRAFT_PLAN_EXEC=1: execute the plan first (its own physical plan,
+        // rows counted and discarded; `df.count()` would plan and run a
+        // different query) so the dump shows the FINAL adaptive plan —
         // AQE runtime decisions (ReusedExchange/stage dedup, coalesced
         // AQEShuffleRead, SMJ→SHJ/BHJ rewrites) are invisible in the
         // pre-execution formatted plan.
-        if (sys.env.contains("GRAFT_PLAN_EXEC")) df.count()
+        if (sys.env.contains("GRAFT_PLAN_EXEC")) df.queryExecution.toRdd.count()
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),

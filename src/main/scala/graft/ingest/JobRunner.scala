@@ -80,13 +80,13 @@ object JobRunner {
       val epochsLoaded = wh.readEpochs().count()
       if (metrics.dropped.value > 0)
         // processing.py:173-180's per-subject drop log, summarized.
-        println(f"[ingest] dropped ${metrics.dropped.value}/" +
+        graft.Log.info(f"[ingest] dropped ${metrics.dropped.value}/" +
           f"${metrics.totalEvents.value} invalid epochs " +
           f"(${metrics.dropRate * 100}%.1f%%)")
       if (metrics.salvagedRecords.value > 0 || metrics.skippedTals.value > 0)
         // Run-level salvage totals; the per-subject breakdown is queryable
         // as SALVAGE_WARNING rows in INGESTION_ERRORS.
-        println(s"[ingest] lenient salvage: " +
+        graft.Log.info(s"[ingest] lenient salvage: " +
           s"${metrics.salvagedRecords.value} truncated record(s) dropped, " +
           s"${metrics.skippedTals.value} malformed TAL(s) skipped")
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -32,42 +33,31 @@ object TextSketchQueries {
       val width = 64
       val md5int = (c: Column) =>
         conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-      // Persisted: the exact vocab aggregate (the one full corpus
-      // explode+shuffle) feeds THREE consumers — the bucket expansion (via
-      // est's join left side AND cells) and the top-10 ranking; without the
-      // persist the r15 before-plan repeats the whole scan+Generate+
-      // aggregate subtree three times. Cached size is one row per distinct
-      // token — the sketch's own working set.
+      // The exact vocab aggregate (the one full corpus explode+shuffle)
+      // feeds two consumers, the sketch cells and the top-10 ranking. Both
+      // read the same (tok, n) columns, so their exchanges are identical
+      // and AQE reuses one shuffle: the corpus is scanned once, with no
+      // cached intermediate left behind in the session.
       val vocab = Tables.documents(s, dir)
         .select(explode(toks(col("text"))).as("tok"))
         .filter(length(col("tok")) > 0)
         .groupBy("tok").agg(count(lit(1)).as("n"))
-        .persist()
-      val buck = vocab
-        .select(col("tok"), col("n"),
-          explode(array((0 until depth).map(lit): _*)).as("k"))
+      def buckets(df: DataFrame) = df
+        .withColumn("k", explode(array((0 until depth).map(lit): _*)))
         .withColumn("bucket",
           pmod(md5int(concat_ws(":", col("k"), col("tok"))), lit(width)))
-      val cells = buck.groupBy("k", "bucket").agg(sum("n").as("cell"))
-      val est = buck.join(cells, Seq("k", "bucket"))
-        .groupBy("tok").agg(min("cell").as("cm_est"))
+      val cells = buckets(vocab).groupBy("k", "bucket").agg(sum("n").as("cell"))
       // True top-10 via orderBy+limit (TakeOrderedAndProject: per-partition
-      // top-10, merge of ≤10-row heaps) — never a global single-partition
-      // WindowExec over the unbounded vocabulary. The rank is then
-      // recomputed INSIDE the 10-row set as 1 + |rows sorting strictly
-      // before it| (broadcast 10×10 self-compare), which on the strict
-      // (n desc, tok) total order — tok is unique after the groupBy — is
-      // exactly row_number() over the same order: identical rows, identical
-      // rn, no unpartitioned window anywhere in the plan.
-      val top = vocab.orderBy(col("n").desc, col("tok")).limit(10)
-      val ranked = top.join(
-          broadcast(top.select(col("tok").as("tok_y"), col("n").as("n_y"))),
-          col("n_y") > col("n") ||
-            (col("n_y") === col("n") && col("tok_y") < col("tok")),
-          "left")
-        .groupBy("tok", "n")
-        .agg((count(col("tok_y")) + 1).cast("int").as("rn"))
-      ranked.join(est, "tok")
+      // top-10, merge of ≤10-row heaps), ranked by a window over those 10
+      // rows only — never a global single-partition WindowExec over the
+      // unbounded vocabulary. tok is unique after the groupBy, so
+      // (n desc, tok) is a total order and rn is deterministic. Only the
+      // ranked tokens need their estimate: 10·d cell lookups.
+      val ranked = vocab.orderBy(col("n").desc, col("tok")).limit(10)
+        .withColumn("rn",
+          row_number().over(Window.orderBy(col("n").desc, col("tok"))))
+      buckets(ranked).join(cells, Seq("k", "bucket"))
+        .groupBy("tok", "n", "rn").agg(min("cell").as("cm_est"))
         .select(col("tok"), col("n").as("exact_n"), col("cm_est"),
           (col("cm_est") - col("n")).as("overestimate"), col("rn"))
         .orderBy("rn")

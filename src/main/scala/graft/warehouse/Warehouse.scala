@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *  - D2 append, D3 truncate, D4 single-error append with generated
   *    uuid/timestamp defaults (`duckdb_client.py:123-143`).
   *
-  * Partitioning by subject_id is also the query-side win: every model
-  * window partitions by subject_id, and the dashboard point reads (S11)
-  * prune to one directory.
+  * `sleep_epochs` is partitioned by subject_id directory, so a subject
+  * predicate on it prunes to one directory. The marts the dashboard reads
+  * (S11) are written by the model DAG as hash-partitioned files, not
+  * directories; their point reads scan every file of the mart.
   */
 final class Warehouse(spark: SparkSession, root: String) {
 

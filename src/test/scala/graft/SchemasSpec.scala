@@ -1,6 +1,6 @@
 package graft
 
-import graft.ingest.SeedData
+import graft.ingest.{JobRunner, SeedData}
 import graft.sleep.SleepModels
 
 /** The reference's schema-drift guard (tests/test_warehouse.py:232-259)
@@ -38,6 +38,21 @@ class SchemasSpec extends SparkSpec {
     import spark.implicits._
     wh.logErrors(Seq(graft.ingest.IngestError(1, "T", "m", "s")).toDF())
     Schemas.assertConforms(wh.readErrors().schema, Schemas.ingestionErrors)
+  }
+
+  test("marts on disk have the declared schemas, fields in order") {
+    // The dashboard reads the marts with these schemas instead of
+    // inferring them, and compares whole rows, so field order matters here
+    // where assertConforms ignores it.
+    val dir = tmpDir("schemas-marts")
+    JobRunner.transform(spark, epochs, SleepModels.DefaultGapEpochs, dir)
+    def fields(t: org.apache.spark.sql.types.StructType) =
+      t.fields.toSeq.map(f => (f.name, f.dataType))
+    Seq("sleep_summary" -> Schemas.sleepSummary,
+        "sleep_metrics" -> Schemas.sleepMetrics).foreach { case (mart, declared) =>
+      val inferred = spark.read.parquet(s"$dir/$mart").schema
+      assert(fields(inferred) == fields(declared), s"$mart on disk")
+    }
   }
 
   test("drift is detected") {

@@ -1,5 +1,17 @@
 package graft.api
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.window.WindowExecBase
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lit, min}
+
 import graft.SparkSpec
 import graft.ingest.{JobRunner, SeedData}
 import graft.warehouse.Warehouse
@@ -63,5 +75,91 @@ class SleepReadsSpec extends SparkSpec {
     // Seeded beta centre is -1 dB: negatives exist and are legal.
     assert(d.getAs[Long]("negative_delta_rows") == 0)
     assert(new SleepReads(spark, dir).sample(3).count() == 3)
+  }
+
+  /** Walks executed plans through adaptive plans and query stages. */
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** `f`'s result and the Spark jobs it started, counted by a listener on
+    * a job group. A sentinel job runs after `f`: listener events arrive in
+    * order, so once the sentinel's start is seen every job of `f` has been
+    * counted.
+    */
+  private def withJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("reads-under-test", "point read")
+      val result = try f finally sc.clearJobGroup()
+      sc.setJobGroup("reads-sentinel", "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("reads-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("reads-sentinel"), "listener never saw the sentinel job")
+      (result, groups.asScala.count(_ == "reads-under-test"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("each dashboard point read is one Spark job with no exchange or window") {
+    val reads = new SleepReads(spark, dir)
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      "subjects" -> (() => reads.subjects()),
+      "summaryFor" -> (() => reads.summaryFor(1)),
+      "hypnogramFor" -> (() => reads.hypnogramFor(0)),
+      "bandPowersFor" -> (() => reads.bandPowersFor(0)),
+      "epochsFor" -> (() => reads.epochsFor(0)))
+    cases.foreach { case (name, read) =>
+      val df = read()
+      val (rows, jobs) = withJobs(df.collect())
+      assert(rows.nonEmpty, s"$name returned no rows")
+      assert(jobs == 1, s"$name ran $jobs jobs, want 1")
+      val plan = df.queryExecution.executedPlan
+      val exchanges = Plans.collect(plan) { case e: Exchange => e.nodeName }
+      val windows = Plans.collect(plan) { case w: WindowExecBase => w.nodeName }
+      assert(exchanges.isEmpty && windows.isEmpty,
+        s"$name plans exchanges $exchanges and windows $windows:\n$plan")
+    }
+  }
+
+  test("hypnogram onset is the first in-period epoch, and empty without a sleep period") {
+    val d = tmpDir("reads-onset")
+    val wh = new Warehouse(spark, d)
+    val seed = SeedData.dataFrame(spark)
+    // A subject awake the whole recording has no sleep episode, so no
+    // stored onset and no in-period epochs.
+    val allWake = seed.filter(col("subject_id") === 0)
+      .withColumn("subject_id", lit(99)).withColumn("stage", lit("W"))
+    wh.loadEpochs(seed.unionByName(allWake))
+    JobRunner.transform(spark, wh.readEpochs(), gapEpochs = 120, d)
+    val reads = new SleepReads(spark, d)
+
+    /** The window formula the stored onset replaced: the onset is the min
+      * `epoch_idx` over the subject's in-period epochs.
+      */
+    def byWindowOnset(subjectId: Int): Seq[Row] =
+      reads.sleepPeriodEpochsFor(subjectId)
+        .withColumn("onset_idx", min("epoch_idx").over(Window.partitionBy(lit(1))))
+        .select(((col("epoch_idx") - col("onset_idx")) * 0.5).as("m"), col("sleep_stage"))
+        .orderBy("m").collect().toSeq.map { r =>
+          val pos = reads.StageOrder.indexOf(r.getString(1))
+          Row(r.getDouble(0), if (pos < 0) null else pos, r.getString(1))
+        }
+
+    val seedSubjects = seed.select("subject_id").distinct().collect().map(_.getInt(0)).sorted
+    assert(seedSubjects.nonEmpty)
+    seedSubjects.foreach { s =>
+      val hyp = reads.hypnogramFor(s).collect().toSeq
+      assert(hyp.nonEmpty, s"subject $s has no hypnogram")
+      assert(hyp == byWindowOnset(s), s"subject $s hypnogram differs from the window onset")
+    }
+    assert(reads.hypnogramFor(99).collect().isEmpty)
+    assert(byWindowOnset(99).isEmpty)
   }
 }
