@@ -18,8 +18,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = Sessions.localBuilder(cpus)
+    val builder = Sessions.localBuilder(Sessions.cpus)
     // Extra session confs for local experiments: SPARK_GRAFT_CONF="k=v;k=v".
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

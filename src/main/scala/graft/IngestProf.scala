@@ -48,8 +48,7 @@ object IngestProf {
     val counts = args.headOption.getOrElse("2,20").split(",").map(_.toInt)
     if (args.length > 1 && args(1) == "corrupt") return corruptMain(counts)
     if (args.length > 1 && args(1) == "lenient") return lenientMain(counts)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.localBuilder(cpus).getOrCreate()
+    val spark = Sessions.localBuilder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -138,8 +137,7 @@ object IngestProf {
     * the healthy 90%. Invariants ride along as hard requires.
     */
   private def corruptMain(counts: Array[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.localBuilder(cpus).getOrCreate()
+    val spark = Sessions.localBuilder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -155,7 +153,7 @@ object IngestProf {
       // corrupted variant for planted subjects (healthy files are shared
       // between the two runs, so "byte-identical input" holds trivially
       // and the disk cost stays ~1.1× the corpus).
-      spark.range(n).repartition(math.min(n, cpus.toInt))
+      spark.range(n).repartition(math.min(n, Sessions.cpus.toInt))
         .mapPartitions { it =>
           it.map { s0 =>
             val s = s0.toInt
@@ -235,8 +233,7 @@ object IngestProf {
     * contract holds at decade scale, not just in the unit specs.
     */
   private def lenientMain(counts: Array[Int]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.localBuilder(cpus).getOrCreate()
+    val spark = Sessions.localBuilder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -253,7 +250,7 @@ object IngestProf {
       val truncSet = planted.filter(s => (s / 10) % 2 == 0).toSet
       val hostileSet = planted.filter(s => (s / 10) % 2 == 1).toSet
 
-      spark.range(n).repartition(math.min(n, cpus.toInt))
+      spark.range(n).repartition(math.min(n, Sessions.cpus.toInt))
         .mapPartitions { it =>
           it.map { s0 =>
             val s = s0.toInt

@@ -45,8 +45,7 @@ object JobProf {
 
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.localBuilder(cpus).getOrCreate()
+    val spark = Sessions.localBuilder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (name == "ALL") { sweepAll(spark, sfDir); spark.stop(); return }
     val q = Registry.byName(name)

@@ -39,8 +39,7 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = Sessions.localBuilder(cpus)
+    val builder = Sessions.localBuilder(Sessions.cpus)
     // Extra session confs for experiments: SPARK_GRAFT_CONF="k=v;k=v".
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
@@ -242,7 +241,7 @@ object ScaleCheck {
       val (tBpe, nToks) = leg("bpe_apply")(time {
         graft.ops.Bpe.applyTokens(docs, "text",
           graft.ops.Bpe.mergeStats(docs, "text", 20),
-          repartitionTo = cpus.toInt).count()
+          repartitionTo = Sessions.cpus.toInt).count()
       })
       // Count-Min sketch build in its true single-pass shape: hash EVERY
       // token occurrence (corpus × depth generated rows — unlike t40's

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-default session configuration shared by every entrypoint
-  * (Bench / Verify / One / JobProf / PlanAudit / PlanDump / ScaleCheck /
+  * (Bench / Verify / JobProf / PlanAudit / PlanDump / ScaleCheck /
   * IngestProf and the test session). These are SCALE-ADAPTIVE settings —
   * both delegate the actual sizing decision to AQE's runtime statistics,
   * so the same values are right at sf0.1 on local[32] and on a 100 TB
@@ -38,6 +38,13 @@ object Sessions {
       "true")
     .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
       (64L * 1024 * 1024).toString)
+
+  /** The core count every CLI entry point runs at: `SPARK_GRAFT_CPUS`,
+    * else the host's available processors. Read once here, so Bench,
+    * Verify, PlanDump and the profilers plan at the same width.
+    */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   /** The local session shape every entrypoint shares — master =
     * `local[cpus]`, shuffle partitions = cpus, UTC pinned (so `events.ts`

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, GlobExpander, GlobFilter, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -751,313 +752,19 @@ private class EdfScanBuilder(pathSpecs: Seq[String], chunkRecords: Int,
         s"PushedFilters: [${pushed.mkString(", ")}]"
 
     override def planInputPartitions(): Array[InputPartition] = {
-      val spark = org.apache.spark.sql.SparkSession.active
-      val conf = spark.sparkContext.hadoopConfiguration
-
-      // One load spec (a literal dir/file or a glob) planned in full;
-      // a multi-path `load(a, b, …)` unions the per-spec plans below.
-      def planSpec(pathSpec: String): Seq[EdfInputPartition] = {
-      val p = new Path(pathSpec)
-      val fs = p.getFileSystem(conf)
-
-      // Fence resolution for ONE directory's worth of files — shared by
-      // directory loads and (per parent directory) glob loads, so both
-      // paths give the same atomic-visibility guarantee. An in-flight
-      // (or crashed mid-promotion) export publishes a
-      // `_STAGED_MANIFEST-<seq>-<qid>` redirect table as its atomic
-      // commit point; a finished export leaves a `_COMMITTED-…` marker
-      // while older crashed manifests linger. Resolving every name
-      // through the HIGHEST-(seq, qid) fence mentioning it gives this
-      // listing a CONSISTENT view: an in-flight export's files read
-      // their staged copies (falling back to the final once promoted)
-      // so a reader sees the complete new state — never a half-promoted
-      // mix — while a crashed export's manifest is fenced per name by
-      // any newer commit (no clocks: sequence numbers are taken at
-      // commit time, so a re-run always outranks the crash it
-      // replaces). Listings without fence files (the steady state) pay
-      // nothing: no staging listing, no manifest reads.
-      // `nameOk` gates which MENTIONED-but-unlisted names this load
-      // serves (a glob only serves pending names matching its pattern).
-      def resolveDir(dir: Path, dataFiles: Seq[String],
-          fences: Seq[EdfBatchWrite.Fence],
-          nameOk: String => Boolean): Seq[EdfInputPartition] = {
-        if (fences.isEmpty) return dataFiles.map(EdfInputPartition(_))
-        val mentions = EdfBatchWrite.mentionsByName(fs, fences)
-        // Staged-copy existence for every mention, answered from ONE
-        // recursive staging-tree listing instead of an fs.exists round
-        // trip per redirected name — on an object store that's one LIST
-        // versus O(fences) HEADs. Snapshot semantics are the same as
-        // the probes': a promotion racing this plan moves files
-        // staged→final atomically, and the reader's ordered candidates
-        // (staged first, final fallback) absorb exactly that race.
-        val stagedSet: Set[String] = {
-          val out = Set.newBuilder[String]
-          try {
-            val it = fs.listFiles(
-              new Path(dir, EdfBatchWrite.TempDirName), true)
-            while (it.hasNext) out += it.next().getPath.toString
-          } catch { case _: java.io.FileNotFoundException => () }
-          out.result()
-        }
-        def stagedExists(staged: String): Boolean =
-          stagedSet.contains(fs.makeQualified(new Path(staged)).toString)
-
-        val listedNames =
-          dataFiles.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
-        val fromListing = dataFiles.map { f =>
-          val name = f.substring(f.lastIndexOf('/') + 1)
-          mentions.get(name).map(_.last) match {
-            case Some((fence, staged))
-                if !fence.committed && stagedExists(staged) =>
-              EdfInputPartition(f, Seq(staged, f))
-            // Committed marker, retired/promoted manifest entry, or an
-            // unmentioned steady-state file: the final bytes are the
-            // truth.
-            case _ => EdfInputPartition(f)
-          }
-        }
-        // Mentioned names with no final file in the listing. For an
-        // in-flight manifest that's a brand-new file still staged —
-        // part of the committed state (qualified logical path, so the
-        // `path` column spells the same before and after promotion).
-        // Walk mentions newest-first: a committed marker ends the
-        // search (its final is the truth — absent from the listing
-        // means promoted-after-listing or externally removed); a ghost
-        // mention (manifest whose staged copy vanished without a
-        // final — e.g. staging destroyed after an ambiguous publish)
-        // falls through to the next-older fence, so the newest
-        // SURVIVING copy is served and nothing fails with
-        // FileNotFoundException.
-        def resolvePending(name: String,
-            ms: Seq[(EdfBatchWrite.Fence, String)]):
-            Option[EdfInputPartition] = {
-          val logical = fs.makeQualified(new Path(dir, name)).toString
-          val it = ms.reverseIterator
-          while (it.hasNext) {
-            val (fence, staged) = it.next()
-            if (fence.committed)
-              return if (fs.exists(new Path(logical)))
-                Some(EdfInputPartition(logical)) else None
-            if (stagedExists(staged))
-              return Some(EdfInputPartition(logical, Seq(staged, logical)))
-          }
-          if (fs.exists(new Path(logical))) Some(EdfInputPartition(logical))
-          else None // a true ghost: no copy of this name survives
-        }
-        val pending = mentions.toSeq.collect {
-          case (name, ms) if !listedNames.contains(name) && nameOk(name) =>
-            resolvePending(name, ms)
-        }.flatten
-        fromListing ++ pending
-      }
-
-      // The hidden-name convention ([[EdfBatchWrite.hiddenName]]) is what
-      // keeps this source's own fence files and staging tree out of data
-      // scans.
-      def hidden(name: String): Boolean = EdfBatchWrite.hiddenName(name)
-      // The directory-load data gate, applied to listed files AND to
-      // pending (mentioned-but-unlisted) names, so a manifest mentioning
-      // a non-edf or hidden name cannot surface a file the steady-state
-      // listing would hide.
-      def dataName(name: String): Boolean =
-        !hidden(name) && name.toLowerCase.endsWith(".edf")
-      // One directory's full resolution — shared by direct directory
-      // loads and glob-matched directories (whose fences live inside
-      // them, found by this listing).
-      def loadDir(d: Path): Seq[EdfInputPartition] = {
-        val listed = fs.listStatus(d).toSeq.filter(_.isFile).map(_.getPath)
-        resolveDir(d,
-          listed.map(_.toString).filter(f =>
-            dataName(f.substring(f.lastIndexOf('/') + 1))),
-          EdfBatchWrite.fencesOf(listed),
-          dataName)
-      }
-      val parts: Seq[EdfInputPartition] =
-        if (fs.isDirectory(p)) loadDir(p)
-        else {
-          // Glob loads get the SAME fence resolution as directory
-          // loads. Fence files never match a data glob (`*.edf`), so
-          // probe for them with two sibling globs on the pattern's
-          // parent — constant RPC cost however many directories the
-          // glob spans; parents without fences (the steady state)
-          // resolve to plain partitions. The probe runs even when the
-          // data glob matches NOTHING: an in-flight export whose files
-          // are all brand-new (staged, nothing promoted yet) is part of
-          // the committed state and must be visible to glob readers
-          // exactly as a directory load would serve it.
-          // Raw globStatus applies NO hidden-file filter: a broad pattern
-          // (`dir/*`) matches this source's own fence files — drop hidden
-          // names, mirroring the directory branch's listing gate.
-          val gsAll = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-            .filterNot(s => hidden(s.getPath.getName))
-          // A glob-matched DIRECTORY expands to its children — each
-          // matched directory gets the full directory-load resolution
-          // instead of being planned as (or silently dropped from) file
-          // partitions. Expansion is ONE level, the same answer a direct
-          // directory load of it gives (this source's directory loads do
-          // not recurse into subdirectories).
-          val (dirMatches, gs) = gsAll.partition(_.isDirectory)
-          val fromDirs = dirMatches.map(_.getPath).sortBy(_.toString)
-            .flatMap(loadDir)
-          val filesByDir = gs.map(_.getPath).groupBy(_.getParent)
-          // The sibling fence probe and the pending-name gate both come
-          // from a TEXTUAL parent/name split of the pattern. A slash
-          // inside braces ({a,a/b.edf}) breaks that split — so expand
-          // those braces FIRST (GlobExpander, the globber's own first
-          // step): every resulting alternative's remaining braces are
-          // slash-free, making its parent/name split a valid glob again.
-          // Each alternative probes fences under its own parent pattern
-          // and gates pending names by its own name component, so a
-          // fence-only directory (an export whose matching files are ALL
-          // still staged) is visible to brace-with-slash patterns exactly
-          // as to plain ones.
-          def probeFences(dirPattern: Path): Seq[Path] =
-            Seq(EdfBatchWrite.ManifestPrefix,
-              EdfBatchWrite.CommittedPrefix).flatMap { pre =>
-              Option(fs.globStatus(new Path(dirPattern, pre + "*")))
-                .toSeq.flatten.filter(_.isFile).map(_.getPath)
-            }
-          // Validate a split piece WITHOUT I/O (GlobFilter compiles the
-          // pattern eagerly and does no RPC), so only pattern-syntax
-          // failures take the degrade path — a genuine I/O failure inside
-          // the probe itself must stay loud, never silently thin the scan.
-          def validGlob(s: String): Boolean =
-            try { new org.apache.hadoop.fs.GlobFilter(s); true }
-            catch { case _: java.io.IOException => false }
-          val alternatives: Seq[Path] =
-            try org.apache.hadoop.fs.GlobExpander.expand(pathSpec)
-              .asScala.toSeq.map(new Path(_))
-            catch { case _: java.io.IOException => Seq(p) }
-          // Per alternative: its name-component filter plus the parent
-          // patterns to probe (its textual parent; when the alternative
-          // has no parent — a relative single-component pattern — the
-          // actual match parents stand in). Any pattern globStatus
-          // accepted splits cleanly after expansion, so the degrade
-          // branches below are belts only — and LOUD ones: an operator
-          // must know when pending-name discovery was skipped. Probing
-          // never degrades past the actual match parents, so LISTED
-          // matches keep full redirect resolution in every case.
-          val altSplits
-              : Seq[(Option[org.apache.hadoop.fs.GlobFilter], Seq[Path])] =
-            alternatives.map { a =>
-              val nameGlob =
-                try Some(new org.apache.hadoop.fs.GlobFilter(a.getName))
-                catch { case _: java.io.IOException => None }
-              if (nameGlob.isEmpty)
-                graft.Log.warn(s"[edf-read] pattern '$pathSpec': " +
-                  s"alternative '$a' has no valid name-component glob — " +
-                  "pending-name discovery skipped for it; an in-flight " +
-                  "export's not-yet-promoted files may be invisible to " +
-                  "this pattern")
-              val parents: Seq[Path] = Option(a.getParent) match {
-                case Some(par) if validGlob(par.toString) => Seq(par)
-                case Some(par) =>
-                  graft.Log.warn(s"[edf-read] pattern '$pathSpec': " +
-                    s"alternative '$a' has no valid parent glob ('$par') " +
-                    "— probing fences on the actual match parents " +
-                    "instead; a fence-only directory is invisible to " +
-                    "this alternative")
-                  filesByDir.keySet.toSeq.sortBy(_.toString)
-                case None =>
-                  // Only the filesystem root has no parent (a relative
-                  // single-component pattern's parent is the empty
-                  // path, handled above) — effectively unreachable, but
-                  // it IS a pending-discovery degrade, so it warns like
-                  // its sibling.
-                  graft.Log.warn(s"[edf-read] pattern '$pathSpec': " +
-                    s"alternative '$a' has no parent to probe — " +
-                    "probing fences on the actual match parents " +
-                    "instead; a fence-only directory is invisible to " +
-                    "this alternative")
-                  filesByDir.keySet.toSeq.sortBy(_.toString)
-              }
-              (nameGlob, parents)
-            }
-          // Probe each distinct parent pattern ONCE (two sibling globs) —
-          // constant RPC per alternative however many directories it
-          // spans; parents without fences (the steady state) cost the
-          // two empty globs and nothing more.
-          val probeByParent: Map[String, Seq[Path]] =
-            altSplits.flatMap(_._2).map(_.toString).distinct
-              .map(s => s -> probeFences(new Path(s))).toMap
-          // Which alternatives saw each fenced directory: pending names
-          // there are served iff they match the name component of an
-          // alternative whose parent pattern reached that directory.
-          val dirGates: Map[Path, Seq[org.apache.hadoop.fs.GlobFilter]] =
-            altSplits.flatMap { case (ngOpt, parents) =>
-              ngOpt.toSeq.flatMap { ng =>
-                parents.flatMap(par => probeByParent(par.toString))
-                  .map(f => f.getParent -> ng)
-              }
-            }.groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
-          val fencesByDir: Map[Path, Seq[EdfBatchWrite.Fence]] =
-            EdfBatchWrite.fencesOf(
-              probeByParent.values.flatten.toSeq.distinct)
-              .groupBy(_.path.getParent)
-          // Every directory with a matching final file OR a fence gets
-          // resolved — a fence-only directory is how a reader sees an
-          // export whose matching files are ALL still staged. A directory
-          // matched both as a dir-match AND as some matched file's parent
-          // (the brace dir-and-file overlap) would be fully resolved
-          // twice — listing, fence probe, manifest reads — with one copy
-          // discarded by the dedup below; skip the file-branch pass only
-          // when the dir branch provably serves a superset: every file
-          // match is a plain data name (which loadDir's gate always
-          // serves) AND the directory carries no fence — with a fence
-          // present, a foreign manifest can mention a non-edf pending
-          // name that only the file branch's alternative gate would
-          // serve, so both branches run and the dedup absorbs the
-          // overlap.
-          val redundant = dirMatches.map(_.getPath).toSet.filter { d =>
-            !fencesByDir.contains(d) &&
-              filesByDir.getOrElse(d, Nil).forall(f => dataName(f.getName))
-          }
-          val dirs = (filesByDir.keySet ++ fencesByDir.keySet -- redundant)
-            .toSeq.sortBy(_.toString)
-          // Pending names a glob serves must themselves match some
-          // alternative's file component, or `load("part-1*.edf")` would
-          // surface an in-flight export's unrelated files.
-          val fromFiles = dirs.flatMap { dir =>
-            val gates = dirGates.getOrElse(dir, Nil)
-            resolveDir(dir,
-              filesByDir.getOrElse(dir, Nil).map(_.toString),
-              fencesByDir.getOrElse(dir, Nil),
-              name => !hidden(name) &&
-                gates.exists(_.accept(new Path(name))))
-          }
-          // A brace glob can match a directory AND a file inside it
-          // (`{day1,day1/rec0.edf}`): the two branches then overlap, and
-          // the union-level dedup below (shared with multi-path loads)
-          // drops the double-read.
-          val resolved = fromDirs ++ fromFiles
-          // The pattern matched NOTHING and no pending name resolved:
-          // keep the pre-fence LOUD behavior — the raw pattern becomes
-          // one partition whose read fails with the underlying
-          // file-not-found, so a typo'd pattern can never silently
-          // return an empty result, and the outcome does not flip when
-          // lingering fences are later cleaned up. (A matched-but-empty
-          // directory, by contrast, resolves to an empty scan — the same
-          // answer a direct directory load of it gives.)
-          if (gsAll.isEmpty && resolved.isEmpty)
-            Seq(EdfInputPartition(pathSpec, noMatch = true))
-          else resolved
-        }
-      parts
-      } // planSpec
+      val conf = org.apache.spark.sql.SparkSession.active.sparkContext
+        .hadoopConfiguration
       // Union of the per-spec plans, dedup'd by logical path — the ONE
-      // dedup point, covering both overlap classes: a file reachable
-      // through two specs (`load(dir, s"$dir/rec0.edf")`) and a brace
-      // glob's dir-and-file overlap within one spec. The loud no-match
-      // partition stays per spec: ONE typo'd path in a multi-path load
-      // fails the read rather than silently thinning it.
-      // The loud no-match partition is exempt from path pushdown: a
-      // typo'd spec must fail the read even when a pushed `path`
-      // predicate doesn't match the raw pattern string — pruning it
-      // would turn the guaranteed failure into a silent empty result.
-      pathSpecs.flatMap(planSpec).distinctBy(_.path)
+      // dedup point: a file reachable through two specs
+      // (`load(dir, s"$dir/rec0.edf")`) or through two brace alternatives
+      // of one spec (`{day,day/rec0.edf}`) is read once. The loud
+      // no-match partition stays per spec, so ONE typo'd path in a
+      // multi-path load fails the read rather than silently thinning it,
+      // and it is exempt from path pushdown: pruning it would turn the
+      // guaranteed failure into a silent empty result.
+      pathSpecs.flatMap(EdfPlanner.plan(_, conf)).distinctBy(_.path)
         .filter(part => part.noMatch || pathOk(part.path))
-        .map(p => p: InputPartition)
-        .toArray
+        .toArray[InputPartition]
     }
 
     override def createReaderFactory(): PartitionReaderFactory = {
@@ -1066,6 +773,198 @@ private class EdfScanBuilder(pathSpecs: Seq[String], chunkRecords: Int,
         new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
         chunkRecords, wantedChannels, lenient)
     }
+  }
+}
+
+/** The EDF scan's read planner. A load spec plans in two steps:
+  *
+  *  1. '''Find the targets''' — the directories the spec reaches, each
+  *     with the data files listed in it, the commit-protocol fence files
+  *     found for it, and a name gate. A directory load is one target
+  *     from its listing. A glob is one target per matched directory (a
+  *     directory load of it — one level, no recursion) plus one per
+  *     directory holding a matched file or a fence file, found through
+  *     the pattern's brace alternatives and two sibling fence probes.
+  *  2. '''Resolve each target''' with the per-name manifest rule
+  *     ([[resolve]]), the same rule [[EdfExportRecovery.rollForward]]
+  *     applies.
+  *
+  * Directory, glob and multi-path loads all reduce to these two steps;
+  * the scan unions the per-spec plans and dedups them by logical path.
+  */
+private[sources] object EdfPlanner {
+  import EdfBatchWrite.{Fence, hiddenName}
+
+  /** One directory to resolve. `files` are the data files a listing or
+    * glob matched there (the listing's path strings); `nameOk` gates
+    * which names that fences mention but no listing shows this load
+    * serves.
+    */
+  private final case class Target(dir: Path, files: Seq[String],
+      fences: Seq[Fence], nameOk: String => Boolean)
+
+  /** One load spec's partitions. A glob that matched nothing and resolved
+    * no pending name plans one loud `noMatch` partition, whose read fails
+    * with the underlying file-not-found: a typo'd pattern never returns a
+    * silent empty result, and the outcome does not flip when lingering
+    * fences are cleaned up. A matched-but-empty directory is an empty
+    * scan, as a direct load of it is.
+    */
+  def plan(spec: String, conf: Configuration): Seq[EdfInputPartition] = {
+    val p = new Path(spec)
+    val fs = p.getFileSystem(conf)
+    if (fs.isDirectory(p)) return resolve(fs, listTarget(fs, p))
+    // Raw globStatus applies no hidden-file filter: a broad pattern
+    // (`dir/*`) matches this source's own fence files and staging tree.
+    val matches = Option(fs.globStatus(p)).toSeq.flatten
+      .filterNot(s => hiddenName(s.getPath.getName))
+    val parts = globTargets(fs, spec, matches).flatMap(resolve(fs, _))
+    if (matches.isEmpty && parts.isEmpty)
+      Seq(EdfInputPartition(spec, noMatch = true))
+    else parts
+  }
+
+  /** The directory-load data gate, applied to listed files AND to pending
+    * names, so a manifest mentioning a non-edf or hidden name cannot
+    * surface a file the steady-state listing would hide.
+    */
+  private def dataName(name: String): Boolean =
+    !hiddenName(name) && name.toLowerCase.endsWith(".edf")
+
+  private def baseName(f: String): String = f.substring(f.lastIndexOf('/') + 1)
+
+  /** Compiles a glob without I/O; `None` only for pattern-syntax errors. */
+  private def globFilter(s: String): Option[GlobFilter] =
+    try Some(new GlobFilter(s)) catch { case _: java.io.IOException => None }
+
+  /** A directory load: one listing yields both the data files and the
+    * fences.
+    */
+  private def listTarget(fs: FileSystem, dir: Path): Target = {
+    val listed = fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
+    Target(dir, listed.map(_.toString).filter(f => dataName(baseName(f))),
+      EdfBatchWrite.fencesOf(listed), dataName)
+  }
+
+  /** A glob's targets. Fence files never match a data glob (`*.edf`), so
+    * each alternative probes for them with two sibling globs on its parent
+    * pattern — constant RPC cost however many directories it spans, and
+    * the probe runs even when the data glob matched nothing: an in-flight
+    * export whose files are all still staged is part of the committed
+    * state. The parent/name split is textual, and a slash inside braces
+    * (`{a,a/b.edf}`) breaks it, so braces are expanded first
+    * (GlobExpander, the globber's own first step); every alternative's
+    * remaining braces are slash-free. Pending names in a fenced directory
+    * are served iff they match the name component of an alternative
+    * whose parent pattern reached it, so `load("part-1*.edf")` cannot
+    * surface an in-flight export's unrelated files.
+    */
+  private def globTargets(fs: FileSystem, spec: String,
+      matches: Seq[FileStatus]): Seq[Target] = {
+    val (dirMatches, fileMatches) = matches.partition(_.isDirectory)
+    val filesByDir = fileMatches.map(_.getPath).groupBy(_.getParent)
+    val alternatives =
+      try GlobExpander.expand(spec).asScala.toSeq.map(new Path(_))
+      catch { case _: java.io.IOException => Seq(new Path(spec)) }
+    // Per alternative: its name gate and the parent patterns it probes.
+    // Any pattern globStatus accepted splits cleanly after expansion, so
+    // the degrades are belts only — and loud ones: an operator must know
+    // when pending-name discovery was skipped. Probing never degrades
+    // past the actual match parents, so LISTED matches keep full
+    // redirect resolution in every case.
+    val probes = alternatives.map { a =>
+      val gate = globFilter(a.getName)
+      if (gate.isEmpty)
+        graft.Log.warn(s"[edf-read] pattern '$spec': alternative '$a' " +
+          "has no valid name-component glob — pending-name discovery " +
+          "skipped for it; an in-flight export's not-yet-promoted files " +
+          "may be invisible to this pattern")
+      val parents = Option(a.getParent)
+        .filter(par => globFilter(par.toString).isDefined) match {
+        case Some(par) => Seq(par)
+        case None =>
+          graft.Log.warn(s"[edf-read] pattern '$spec': alternative '$a' " +
+            "has no valid parent glob — probing fences on the actual " +
+            "match parents instead; a fence-only directory is invisible " +
+            "to this alternative")
+          filesByDir.keys.toSeq.sortBy(_.toString)
+      }
+      (gate, parents.map(_.toString))
+    }
+    // Each distinct parent pattern is probed ONCE.
+    val fenceFiles: Map[String, Seq[Path]] =
+      probes.flatMap(_._2).distinct.map { par =>
+        par -> Seq(EdfBatchWrite.ManifestPrefix, EdfBatchWrite.CommittedPrefix)
+          .flatMap(pre => Option(fs.globStatus(new Path(par, pre + "*")))
+            .toSeq.flatten.filter(_.isFile).map(_.getPath))
+      }.toMap
+    val fences = EdfBatchWrite
+      .fencesOf(fenceFiles.values.flatten.toSeq.distinct)
+      .groupBy(_.path.getParent)
+    val gates: Map[Path, Seq[GlobFilter]] = probes
+      .flatMap { case (gate, parents) =>
+        for (g <- gate.toSeq; par <- parents; f <- fenceFiles(par))
+          yield f.getParent -> g
+      }.groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
+    dirMatches.map(_.getPath).sortBy(_.toString).map(listTarget(fs, _)) ++
+      (filesByDir.keySet ++ fences.keySet).toSeq.sortBy(_.toString).map { d =>
+        val g = gates.getOrElse(d, Nil)
+        Target(d, filesByDir.getOrElse(d, Nil).map(_.toString),
+          fences.getOrElse(d, Nil),
+          name => !hiddenName(name) && g.exists(_.accept(new Path(name))))
+      }
+  }
+
+  /** Resolves one target through its fences. An in-flight (or crashed
+    * mid-promotion) export publishes a `_STAGED_MANIFEST-<seq>-<qid>`
+    * redirect table as its atomic commit point; a finished export leaves
+    * a `_COMMITTED-…` marker while older crashed manifests linger. Each
+    * name walks its mentions newest-first and follows the first fence
+    * that can deliver it: a committed marker → the final; a manifest
+    * whose staged copy survives → the staged copy (final as fallback, so
+    * a promotion racing the reader cannot lose the file); a listed final
+    * → the final; a ghost mention → the next-older fence. A reader thus
+    * sees the complete old or the complete new state, never a
+    * half-promoted mix. Mentioned names with no listed final are pending:
+    * brand-new files still staged, served under their qualified logical
+    * path (so the `path` column spells the same before and after
+    * promotion) when the target's gate admits them; one that no fence
+    * can deliver is served iff its final exists. Targets without fences
+    * (the steady state) cost no I/O.
+    */
+  private def resolve(fs: FileSystem, t: Target): Seq[EdfInputPartition] = {
+    if (t.fences.isEmpty) return t.files.map(EdfInputPartition(_))
+    val mentions = EdfBatchWrite.mentionsByName(fs, t.fences)
+    // Staged-copy existence for every mention from ONE recursive listing
+    // of the staging tree — one LIST on an object store, never a HEAD
+    // per redirected name.
+    val staged: Set[String] = {
+      val out = Set.newBuilder[String]
+      try {
+        val it = fs.listFiles(new Path(t.dir, EdfBatchWrite.TempDirName), true)
+        while (it.hasNext) out += it.next().getPath.toString
+      } catch { case _: java.io.FileNotFoundException => () }
+      out.result()
+    }
+    val live = (s: String) => staged(fs.makeQualified(new Path(s)).toString)
+    def deliver(logical: String, listed: Boolean,
+        ms: Seq[(Fence, String)]): Option[EdfInputPartition] =
+      ms.reverseIterator
+        .find { case (f, s) => listed || f.committed || live(s) } match {
+        case Some((f, s)) if !f.committed && live(s) =>
+          Some(EdfInputPartition(logical, Seq(s, logical)))
+        case _ if listed || fs.exists(new Path(logical)) =>
+          Some(EdfInputPartition(logical))
+        case _ => None
+      }
+    val listedNames = t.files.map(baseName).toSet
+    t.files.flatMap(f =>
+      deliver(f, listed = true, mentions.getOrElse(baseName(f), Nil))) ++
+      mentions.toSeq.collect {
+        case (name, ms) if !listedNames(name) && t.nameOk(name) =>
+          deliver(fs.makeQualified(new Path(t.dir, name)).toString,
+            listed = false, ms)
+      }.flatten
   }
 }
 
