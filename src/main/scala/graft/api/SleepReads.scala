@@ -1,8 +1,11 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.Schemas
 import graft.warehouse.Warehouse
@@ -11,16 +14,26 @@ import graft.warehouse.Warehouse
   * (S11, `viz/dashboard.py:94-125`) and the verify-db diagnostics (S12,
   * `scripts/verify_db.py:16-39`), as an API over the materialized marts.
   *
-  * Unlike `sleep_epochs`, the marts are not partitioned by `subject_id`
-  * directory: the model DAG writes them hash-partitioned by subject into
-  * one file per shuffle partition, so a point read scans every file of
-  * its mart. The `subject_id` predicate is pushed into the parquet scan
-  * (row groups whose statistics exclude the subject are skipped), and
-  * Catalyst prunes columns to the selected set (the hypnogram reads 5 of
-  * 18 metric columns).
+  * The subject list, the summary row and the band bars all read
+  * `sleep_summary`, which has one row per subject. A reader holds one
+  * snapshot of its rows and serves those three reads from it as local
+  * `DataFrame`s, whose collect runs no Spark job. Before each of the three
+  * reads the reader lists the mart directory once; the snapshot is keyed
+  * by its data files' (name, length, modification time) and re-read only
+  * when that key changes. An overwrite writes new part-file names, so a
+  * rewritten mart is never served from old rows, and a deleted one fails
+  * the read. The snapshot lives in this instance only, so it is released
+  * with the reader.
   *
-  * Each point read runs as one Spark job with no exchange: the marts are
-  * read with their declared schemas (no schema-inference job), and each
+  * The epoch reads (`epochsFor`, `sleepPeriodEpochsFor`, `hypnogramFor`)
+  * stay on Spark. `sleep_metrics` is not partitioned by `subject_id`
+  * directory: the model DAG writes it hash-partitioned by subject into
+  * one file per shuffle partition, so a point read scans every file. The
+  * `subject_id` predicate is pushed into the parquet scan (row groups
+  * whose statistics exclude the subject are skipped), and Catalyst prunes
+  * columns to the selected set (the hypnogram reads 5 of 18 metric
+  * columns). Each runs as one Spark job with no exchange: the mart is
+  * read with its declared schema (no schema-inference job), and the
   * result is small enough to sort in one partition (no range-partitioning
   * sample job or shuffle).
   */
@@ -32,8 +45,6 @@ final class SleepReads(spark: SparkSession, warehouseDir: String) {
   private def mart(name: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(s"$warehouseDir/$name")
 
-  private def summary = mart("sleep_summary", Schemas.sleepSummary)
-
   private def metricsFor(subjectId: Int): DataFrame =
     mart("sleep_metrics", Schemas.sleepMetrics)
       .filter(col("subject_id") === subjectId)
@@ -44,13 +55,51 @@ final class SleepReads(spark: SparkSession, warehouseDir: String) {
   private def sortedSmall(df: DataFrame, by: String): DataFrame =
     df.coalesce(1).orderBy(by)
 
-  /** Subject list (`dashboard.py:94-96`). */
+  private val summaryDir = new Path(s"$warehouseDir/sleep_summary")
+  private val subjectIdx = Schemas.sleepSummary.fieldIndex("subject_id")
+
+  /** The `sleep_summary` rows and the (name, length, modification time)
+    * of the data files they were read from, published as one pair: a
+    * concurrent reader sees the old pair or the new one.
+    */
+  @volatile private var snapshot: (Seq[(String, Long, Long)], Seq[Row]) = (null, Nil)
+
+  /** The mart's rows, re-read only when its listed data files changed. */
+  private def summaryRows(): Seq[Row] = {
+    val files = summaryDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(summaryDir).toSeq
+      .filter { f =>
+        val name = f.getPath.getName
+        f.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
+      .sortBy(_.getPath.getName)
+    val key = files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+    val current = snapshot
+    if (current._1 == key) current._2
+    else {
+      // Reads exactly the listed files, so the rows belong to the key.
+      val rows = if (files.isEmpty) Nil else spark.read.schema(Schemas.sleepSummary)
+        .parquet(files.map(_.getPath.toString): _*).collect().toSeq
+      snapshot = (key, rows)
+      rows
+    }
+  }
+
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  private def rowsFor(subjectId: Int): Seq[Row] =
+    summaryRows().filter(r => !r.isNullAt(subjectIdx) && r.getInt(subjectIdx) == subjectId)
+
+  /** Subject list (`dashboard.py:94-96`), ascending with nulls first. */
   def subjects(): DataFrame =
-    sortedSmall(summary.select("subject_id"), "subject_id")
+    local(summaryRows().map(r => Option(r.get(subjectIdx)).map(_.asInstanceOf[Int]))
+      .sorted.map(id => Row(id.getOrElse(null))),
+      StructType(Seq(Schemas.sleepSummary(subjectIdx))))
 
   /** One summary row (`dashboard.py:110-112`). */
   def summaryFor(subjectId: Int): DataFrame =
-    summary.filter(col("subject_id") === subjectId)
+    local(rowsFor(subjectId), Schemas.sleepSummary)
 
   /** Ordered per-subject hypnogram + smoothed delta (`dashboard.py:113-125`). */
   def epochsFor(subjectId: Int): DataFrame =
@@ -100,11 +149,12 @@ final class SleepReads(spark: SparkSession, warehouseDir: String) {
       ("Alpha", "avg_alpha_power", "8-12 Hz"),
       ("Sigma", "avg_sigma_power", "12-16 Hz"),
       ("Beta", "avg_beta_power", "16-30 Hz"))
-    val stacked = bands.map { case (name, colName, hz) =>
-      s"'$name', '$hz', $colName"
-    }.mkString(", ")
-    summaryFor(subjectId)
-      .selectExpr(s"stack(${bands.size}, $stacked) as (band, hz_range, power)")
+    local(rowsFor(subjectId).flatMap { r =>
+      bands.map { case (name, colName, hz) => Row(name, hz, r.getAs[Any](colName)) }
+    }, StructType(Seq(
+      StructField("band", StringType),
+      StructField("hz_range", StringType),
+      Schemas.sleepSummary("avg_delta_power").copy(name = "power"))))
   }
 
   /** Latest errors (`scripts/simulate_error.py:52`). */

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -12,7 +13,7 @@ import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, min}
 
-import graft.SparkSpec
+import graft.{Schemas, SparkSpec}
 import graft.ingest.{JobRunner, SeedData}
 import graft.warehouse.Warehouse
 
@@ -107,15 +108,24 @@ class SleepReadsSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("each dashboard point read is one Spark job with no exchange or window") {
+  test("point reads: one snapshot job, then one per epoch read") {
     val reads = new SleepReads(spark, dir)
-    val cases: Seq[(String, () => DataFrame)] = Seq(
+    val summaryReads: Seq[(String, () => DataFrame)] = Seq(
       "subjects" -> (() => reads.subjects()),
       "summaryFor" -> (() => reads.summaryFor(1)),
+      "bandPowersFor" -> (() => reads.bandPowersFor(0)))
+    // The first summary-backed read on a fresh reader loads the snapshot
+    // in one job; every later one, in any order, runs none.
+    (summaryReads ++ summaryReads.reverse).zipWithIndex.foreach { case ((name, read), i) =>
+      val (rows, jobs) = withJobs(read().collect())
+      assert(rows.nonEmpty, s"$name returned no rows")
+      val want = if (i == 0) 1 else 0
+      assert(jobs == want, s"$name (read ${i + 1}) ran $jobs jobs, want $want")
+    }
+    val epochReads: Seq[(String, () => DataFrame)] = Seq(
       "hypnogramFor" -> (() => reads.hypnogramFor(0)),
-      "bandPowersFor" -> (() => reads.bandPowersFor(0)),
       "epochsFor" -> (() => reads.epochsFor(0)))
-    cases.foreach { case (name, read) =>
+    epochReads.foreach { case (name, read) =>
       val df = read()
       val (rows, jobs) = withJobs(df.collect())
       assert(rows.nonEmpty, s"$name returned no rows")
@@ -125,6 +135,74 @@ class SleepReadsSpec extends SparkSpec {
       val windows = Plans.collect(plan) { case w: WindowExecBase => w.nodeName }
       assert(exchanges.isEmpty && windows.isEmpty,
         s"$name plans exchanges $exchanges and windows $windows:\n$plan")
+    }
+  }
+
+  /** The Spark formulas the snapshot reads replaced, over the mart in `d`. */
+  private class SparkFormulas(d: String) {
+    private val summary = spark.read.schema(Schemas.sleepSummary).parquet(s"$d/sleep_summary")
+    def subjects(): DataFrame = summary.select("subject_id").coalesce(1).orderBy("subject_id")
+    def summaryFor(s: Int): DataFrame = summary.filter(col("subject_id") === s)
+    def bandPowersFor(s: Int): DataFrame = summaryFor(s).selectExpr(
+      "stack(5, 'Delta', '0.5-4 Hz', avg_delta_power, 'Theta', '4-8 Hz', avg_theta_power, " +
+        "'Alpha', '8-12 Hz', avg_alpha_power, 'Sigma', '12-16 Hz', avg_sigma_power, " +
+        "'Beta', '16-30 Hz', avg_beta_power) as (band, hz_range, power)")
+  }
+
+  /** Asserts equal rows, row order and schema (names, types, nullability). */
+  private def assertSameRead(what: String, got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema == want.schema, s"$what schema ${got.schema} != ${want.schema}")
+    assert(got.collect().toSeq == want.collect().toSeq, s"$what rows differ")
+  }
+
+  test("snapshot reads equal the Spark formulas they replace") {
+    val d = tmpDir("reads-equiv")
+    val wh = new Warehouse(spark, d)
+    wh.loadEpochs(SeedData.dataFrame(spark, subjects = 5))
+    JobRunner.transform(spark, wh.readEpochs(), gapEpochs = 120, d)
+    val reads = new SleepReads(spark, d)
+    val ref = new SparkFormulas(d)
+
+    assertSameRead("subjects", reads.subjects(), ref.subjects())
+    val ids = ref.subjects().collect().map(_.getInt(0)).toSeq
+    assert(ids.size == 5)
+    (ids :+ 999).foreach { s =>
+      assertSameRead(s"summaryFor($s)", reads.summaryFor(s), ref.summaryFor(s))
+      assertSameRead(s"bandPowersFor($s)", reads.bandPowersFor(s), ref.bandPowersFor(s))
+    }
+    assert(reads.summaryFor(999).collect().isEmpty)
+  }
+
+  test("a rewritten mart is re-read; a deleted one fails") {
+    val d = tmpDir("reads-fresh")
+    val wh = new Warehouse(spark, d)
+    wh.loadEpochs(SeedData.dataFrame(spark, subjects = 2))
+    JobRunner.transform(spark, wh.readEpochs(), gapEpochs = 120, d)
+    val reads = new SleepReads(spark, d)
+    assert(reads.subjects().collect().map(_.getInt(0)).toSeq == Seq(0, 1))
+    assert(reads.summaryFor(1).collect().length == 1)
+    assert(reads.bandPowersFor(1).collect().length == 5)
+
+    // Same directory, different subjects: subject 1's epochs as subject 11.
+    JobRunner.transform(spark, wh.readEpochs().filter(col("subject_id") === 1)
+      .withColumn("subject_id", col("subject_id") + 10), gapEpochs = 120, d)
+    val ref = new SparkFormulas(d)
+    assertSameRead("subjects after rewrite", reads.subjects(), ref.subjects())
+    assert(reads.subjects().collect().map(_.getInt(0)).toSeq == Seq(11))
+    Seq(1, 11).foreach { s =>
+      assertSameRead(s"summaryFor($s) after rewrite", reads.summaryFor(s), ref.summaryFor(s))
+      assertSameRead(s"bandPowersFor($s) after rewrite", reads.bandPowersFor(s), ref.bandPowersFor(s))
+    }
+    assert(reads.summaryFor(11).collect().length == 1)
+    assert(reads.summaryFor(1).collect().isEmpty)
+
+    val mart = new Path(s"$d/sleep_summary")
+    assert(mart.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(mart, true))
+    Seq[(String, () => DataFrame)](
+      "subjects" -> (() => reads.subjects()),
+      "summaryFor" -> (() => reads.summaryFor(11)),
+      "bandPowersFor" -> (() => reads.bandPowersFor(11))).foreach { case (name, read) =>
+      withClue(name)(intercept[java.io.FileNotFoundException](read().collect()))
     }
   }
 

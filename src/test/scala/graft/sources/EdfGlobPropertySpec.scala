@@ -359,7 +359,8 @@ class EdfGlobPropertySpec extends SparkSpec {
       (s"$base/{d0,d0/a*.edf}", () => dv(0) ++ gv(0, "a*.edf")),
       // Overlap whose file component matches NON-edf names: a foreign
       // manifest's pending w.bin is served only by the file branch, so
-      // the dir-branch redundant skip must stand down when fences exist.
+      // the union must keep the file branch's targets beside the
+      // directory's when fences exist.
       (s"$base/{d0,d0/w*}", () => dv(0) ++ gv(0, "w*")),
       (s"$base/d0/nomatch*.edf", () => Map.empty))
   }

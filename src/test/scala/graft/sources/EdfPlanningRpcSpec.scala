@@ -66,8 +66,8 @@ object CountingFileSystem {
     * every measured region must run under this lock, and the `cfs:`
     * scheme is EXCLUSIVE to suites that take it — a suite touching a
     * cfs: path outside the lock would make the exact budgets flaky
-    * under sbt's parallel suite execution. [[EdfPlanningRpcSpec]] is
-    * currently the only user.
+    * under sbt's parallel suite execution. [[EdfPlanningRpcSpec]] and
+    * [[EdfPlanningOverlapSpec]] are its users, and both take the lock.
     */
   val measureLock = new Object
 }
