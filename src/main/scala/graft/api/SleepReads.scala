@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 
 import graft.Schemas
 import graft.warehouse.Warehouse
@@ -14,86 +14,70 @@ import graft.warehouse.Warehouse
   * (S11, `viz/dashboard.py:94-125`) and the verify-db diagnostics (S12,
   * `scripts/verify_db.py:16-39`), as an API over the materialized marts.
   *
-  * The subject list, the summary row and the band bars all read
-  * `sleep_summary`, which has one row per subject. A reader holds one
-  * snapshot of its rows and serves those three reads from it as local
-  * `DataFrame`s, whose collect runs no Spark job. Before each of the three
-  * reads the reader lists the mart directory once; the snapshot is keyed
-  * by its data files' (name, length, modification time) and re-read only
-  * when that key changes. An overwrite writes new part-file names, so a
-  * rewritten mart is never served from old rows, and a deleted one fails
-  * the read. The snapshot lives in this instance only, so it is released
-  * with the reader.
+  * Every dashboard read is served from a snapshot the reader holds, as a
+  * local `DataFrame` whose collect runs no Spark job and compiles no
+  * per-subject code. The subject list, the summary row and the band bars
+  * read a snapshot of `sleep_summary`, which has one row per subject. The
+  * epoch reads (`epochsFor`, `sleepPeriodEpochsFor`, `hypnogramFor`) read
+  * a snapshot of the six `sleep_metrics` columns they use, held as
+  * primitive arrays sorted by (subject, `epoch_idx`) with a subject →
+  * row-range index ([[EpochSnapshot]]), and build one subject's rows with
+  * the formulas the Spark plans used.
   *
-  * The epoch reads (`epochsFor`, `sleepPeriodEpochsFor`, `hypnogramFor`)
-  * stay on Spark. `sleep_metrics` is not partitioned by `subject_id`
-  * directory: the model DAG writes it hash-partitioned by subject into
-  * one file per shuffle partition, so a point read scans every file. The
-  * `subject_id` predicate is pushed into the parquet scan (row groups
-  * whose statistics exclude the subject are skipped), and Catalyst prunes
-  * columns to the selected set (the hypnogram reads 5 of 18 metric
-  * columns). Each runs as one Spark job with no exchange: the mart is
-  * read with its declared schema (no schema-inference job), and the
-  * result is small enough to sort in one partition (no range-partitioning
-  * sample job or shuffle).
+  * Before each read the reader lists the mart directory once; a snapshot
+  * is keyed by its data files' (name, length, modification time) and
+  * re-loaded, in one Spark job, only when that key changes. An overwrite
+  * writes new part-file names, so a rewritten mart is never served from
+  * old rows, and a deleted one fails the read. The snapshots live in this
+  * instance only, so they are released with the reader.
   */
 final class SleepReads(spark: SparkSession, warehouseDir: String) {
 
-  /** A mart read with its declared schema, whose field order is the
-    * on-disk order (pinned by `SchemasSpec`).
+  /** A mart's contents loaded from its data files, re-loaded only when
+    * the listed files change. The key and the value are published as one
+    * pair: a concurrent reader sees the old pair or the new one.
     */
-  private def mart(name: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(s"$warehouseDir/$name")
+  private final class Snapshot[T](mart: String, empty: T)(load: Seq[String] => T) {
+    private val dir = new Path(s"$warehouseDir/$mart")
+    @volatile private var current: (Seq[(String, Long, Long)], T) = (null, empty)
 
-  private def metricsFor(subjectId: Int): DataFrame =
-    mart("sleep_metrics", Schemas.sleepMetrics)
-      .filter(col("subject_id") === subjectId)
-
-  /** Sorts a small result in one partition: a single-partition child
-    * satisfies the sort's distribution, so no range exchange is planned.
-    */
-  private def sortedSmall(df: DataFrame, by: String): DataFrame =
-    df.coalesce(1).orderBy(by)
-
-  private val summaryDir = new Path(s"$warehouseDir/sleep_summary")
-  private val subjectIdx = Schemas.sleepSummary.fieldIndex("subject_id")
-
-  /** The `sleep_summary` rows and the (name, length, modification time)
-    * of the data files they were read from, published as one pair: a
-    * concurrent reader sees the old pair or the new one.
-    */
-  @volatile private var snapshot: (Seq[(String, Long, Long)], Seq[Row]) = (null, Nil)
-
-  /** The mart's rows, re-read only when its listed data files changed. */
-  private def summaryRows(): Seq[Row] = {
-    val files = summaryDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(summaryDir).toSeq
-      .filter { f =>
-        val name = f.getPath.getName
-        f.isFile && !name.startsWith("_") && !name.startsWith(".")
+    def apply(): T = {
+      val files = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(dir).toSeq
+        .filter { f =>
+          val name = f.getPath.getName
+          f.isFile && !name.startsWith("_") && !name.startsWith(".")
+        }
+        .sortBy(_.getPath.getName)
+      val key = files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+      val seen = current
+      if (seen._1 == key) seen._2
+      else {
+        // Loads exactly the listed files, so the value belongs to the key.
+        val value = if (files.isEmpty) empty else load(files.map(_.getPath.toString))
+        current = (key, value)
+        value
       }
-      .sortBy(_.getPath.getName)
-    val key = files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
-    val current = snapshot
-    if (current._1 == key) current._2
-    else {
-      // Reads exactly the listed files, so the rows belong to the key.
-      val rows = if (files.isEmpty) Nil else spark.read.schema(Schemas.sleepSummary)
-        .parquet(files.map(_.getPath.toString): _*).collect().toSeq
-      snapshot = (key, rows)
-      rows
     }
   }
+
+  private val summary = new Snapshot("sleep_summary", Seq.empty[Row])(paths =>
+    spark.read.schema(Schemas.sleepSummary).parquet(paths: _*).collect().toSeq)
+
+  private val epochs = new Snapshot("sleep_metrics", EpochSnapshot.empty)(paths =>
+    EpochSnapshot.load(spark.read.schema(Schemas.sleepMetrics).parquet(paths: _*)))
+
+  private val subjectIdx = Schemas.sleepSummary.fieldIndex("subject_id")
 
   private def local(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
   private def rowsFor(subjectId: Int): Seq[Row] =
-    summaryRows().filter(r => !r.isNullAt(subjectIdx) && r.getInt(subjectIdx) == subjectId)
+    summary().filter(r => !r.isNullAt(subjectIdx) && r.getInt(subjectIdx) == subjectId)
 
   /** Subject list (`dashboard.py:94-96`), ascending with nulls first. */
   def subjects(): DataFrame =
-    local(summaryRows().map(r => Option(r.get(subjectIdx)).map(_.asInstanceOf[Int]))
+    local(summary().map(r => Option(r.get(subjectIdx)).map(_.asInstanceOf[Int]))
       .sorted.map(id => Row(id.getOrElse(null))),
       StructType(Seq(Schemas.sleepSummary(subjectIdx))))
 
@@ -101,11 +85,17 @@ final class SleepReads(spark: SparkSession, warehouseDir: String) {
   def summaryFor(subjectId: Int): DataFrame =
     local(rowsFor(subjectId), Schemas.sleepSummary)
 
-  /** Ordered per-subject hypnogram + smoothed delta (`dashboard.py:113-125`). */
-  def epochsFor(subjectId: Int): DataFrame =
-    sortedSmall(metricsFor(subjectId)
-      .select("epoch_idx", "sleep_stage", "is_in_sleep_period",
-        "delta_moving_avg"), "epoch_idx")
+  private val epochSchema = StructType(
+    Seq("epoch_idx", "sleep_stage", "is_in_sleep_period", "delta_moving_avg")
+      .map(Schemas.sleepMetrics(_)))
+
+  /** Ordered per-subject hypnogram + smoothed delta (`dashboard.py:113-125`),
+    * ascending `epoch_idx` with nulls first.
+    */
+  def epochsFor(subjectId: Int): DataFrame = {
+    val e = epochs()
+    local(e.rowsOf(subjectId).map(e.epochRow), epochSchema)
+  }
 
   /** Stage → y-axis position used by the reference hypnogram
     * (`viz/charts.py:10,25`: W, REM, N1, N2, N3 top-to-bottom).
@@ -113,30 +103,37 @@ final class SleepReads(spark: SparkSession, warehouseDir: String) {
   val StageOrder: Seq[String] = Seq("W", "REM", "N1", "N2", "N3")
 
   /** The dashboard's client-side scope: epochs inside the scored sleep
-    * period only (`viz/dashboard.py:168` filters before every chart).
+    * period only (`viz/dashboard.py:168` filters before every chart); an
+    * unknown `is_in_sleep_period` is out of scope.
     */
-  def sleepPeriodEpochsFor(subjectId: Int): DataFrame =
-    epochsFor(subjectId).filter(col("is_in_sleep_period"))
+  def sleepPeriodEpochsFor(subjectId: Int): DataFrame = {
+    val e = epochs()
+    local(e.rowsOf(subjectId).filter(e.inSleepPeriod).map(e.epochRow), epochSchema)
+  }
+
+  private val hypnogramSchema = StructType(Seq(
+    StructField("minutes_after_onset", DoubleType),
+    StructField("stage_position", IntegerType),
+    Schemas.sleepMetrics("sleep_stage")))
 
   /** Hypnogram series with the reference's client-side re-basing
-    * (`viz/charts.py:27`): x = minutes after sleep onset; y = the stage's
-    * ordinal in [[StageOrder]]. The reference takes the onset as the
+    * (`viz/charts.py:27`): x = minutes after sleep onset, null without an
+    * onset and first in order; y = the stage's ordinal in [[StageOrder]],
+    * null for any other stage. The reference takes the onset as the
     * subject's first in-period epoch (`dashboard.py:188`, min epoch_idx);
     * that is always the mart's stored `sleep_onset_epoch_idx`, because the
     * sleep period is `epoch_idx between onset and final awakening` and so
     * starts at the onset epoch itself.
     */
   def hypnogramFor(subjectId: Int): DataFrame = {
-    val pos = StageOrder.zipWithIndex.foldLeft(lit(null).cast("int")) {
-      case (acc, (s, i)) => when(col("sleep_stage") === s, lit(i)).otherwise(acc)
-    }
-    sortedSmall(metricsFor(subjectId)
-      .filter(col("is_in_sleep_period"))
-      .select(
-        ((col("epoch_idx") - col("sleep_onset_epoch_idx")) * 0.5)
-          .as("minutes_after_onset"),
-        pos.as("stage_position"),
-        col("sleep_stage")), "minutes_after_onset")
+    val e = epochs()
+    local(e.rowsOf(subjectId).filter(e.inSleepPeriod)
+      .map(i => (e.epochsAfterOnset(i), e.sleepStage(i)))
+      .sortBy(_._1)
+      .map { case (after, stage) =>
+        val pos = StageOrder.indexOf(stage)
+        Row(after.fold(null: Any)(_ * 0.5), if (pos < 0) null else pos, stage)
+      }, hypnogramSchema)
   }
 
   /** Band-power bars (`viz/charts.py:12-18` BANDS): the five avg_*_power

@@ -156,10 +156,4 @@ final class Warehouse(spark: SparkSession, root: String) {
       n
     }
   }
-
-  def errorsExist(): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(errorsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
 }

@@ -7,11 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit, min}
+import org.apache.spark.sql.functions.{col, countDistinct, lit, min, spark_partition_id, when}
 
 import graft.{Schemas, SparkSpec}
 import graft.ingest.{JobRunner, SeedData}
@@ -78,9 +75,6 @@ class SleepReadsSpec extends SparkSpec {
     assert(new SleepReads(spark, dir).sample(3).count() == 3)
   }
 
-  /** Walks executed plans through adaptive plans and query stages. */
-  private object Plans extends AdaptiveSparkPlanHelper
-
   /** `f`'s result and the Spark jobs it started, counted by a listener on
     * a job group. A sentinel job runs after `f`: listener events arrive in
     * order, so once the sentinel's start is seen every job of `f` has been
@@ -108,37 +102,30 @@ class SleepReadsSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("point reads: one snapshot job, then one per epoch read") {
+  test("point reads: one job per snapshot load, then none") {
     val reads = new SleepReads(spark, dir)
     val summaryReads: Seq[(String, () => DataFrame)] = Seq(
       "subjects" -> (() => reads.subjects()),
       "summaryFor" -> (() => reads.summaryFor(1)),
       "bandPowersFor" -> (() => reads.bandPowersFor(0)))
-    // The first summary-backed read on a fresh reader loads the snapshot
-    // in one job; every later one, in any order, runs none.
-    (summaryReads ++ summaryReads.reverse).zipWithIndex.foreach { case ((name, read), i) =>
-      val (rows, jobs) = withJobs(read().collect())
-      assert(rows.nonEmpty, s"$name returned no rows")
-      val want = if (i == 0) 1 else 0
-      assert(jobs == want, s"$name (read ${i + 1}) ran $jobs jobs, want $want")
-    }
     val epochReads: Seq[(String, () => DataFrame)] = Seq(
       "hypnogramFor" -> (() => reads.hypnogramFor(0)),
-      "epochsFor" -> (() => reads.epochsFor(0)))
-    epochReads.foreach { case (name, read) =>
-      val df = read()
-      val (rows, jobs) = withJobs(df.collect())
-      assert(rows.nonEmpty, s"$name returned no rows")
-      assert(jobs == 1, s"$name ran $jobs jobs, want 1")
-      val plan = df.queryExecution.executedPlan
-      val exchanges = Plans.collect(plan) { case e: Exchange => e.nodeName }
-      val windows = Plans.collect(plan) { case w: WindowExecBase => w.nodeName }
-      assert(exchanges.isEmpty && windows.isEmpty,
-        s"$name plans exchanges $exchanges and windows $windows:\n$plan")
+      "epochsFor" -> (() => reads.epochsFor(0)),
+      "sleepPeriodEpochsFor" -> (() => reads.sleepPeriodEpochsFor(0)))
+    // The first read of each mart on a fresh reader loads its snapshot in
+    // one job; every later one, in any order, runs none. The count wraps
+    // the read call too, because the snapshot loads when a read is called.
+    Seq(summaryReads, epochReads).foreach { group =>
+      (group ++ group.reverse).zipWithIndex.foreach { case ((name, read), i) =>
+        val (rows, jobs) = withJobs(read().collect())
+        assert(rows.nonEmpty, s"$name returned no rows")
+        val want = if (i == 0) 1 else 0
+        assert(jobs == want, s"$name (read ${i + 1}) ran $jobs jobs, want $want")
+      }
     }
   }
 
-  /** The Spark formulas the snapshot reads replaced, over the mart in `d`. */
+  /** The Spark formulas the snapshot reads replaced, over the marts in `d`. */
   private class SparkFormulas(d: String) {
     private val summary = spark.read.schema(Schemas.sleepSummary).parquet(s"$d/sleep_summary")
     def subjects(): DataFrame = summary.select("subject_id").coalesce(1).orderBy("subject_id")
@@ -147,6 +134,35 @@ class SleepReadsSpec extends SparkSpec {
       "stack(5, 'Delta', '0.5-4 Hz', avg_delta_power, 'Theta', '4-8 Hz', avg_theta_power, " +
         "'Alpha', '8-12 Hz', avg_alpha_power, 'Sigma', '12-16 Hz', avg_sigma_power, " +
         "'Beta', '16-30 Hz', avg_beta_power) as (band, hz_range, power)")
+
+    private def metricsFor(s: Int): DataFrame =
+      spark.read.schema(Schemas.sleepMetrics).parquet(s"$d/sleep_metrics")
+        .filter(col("subject_id") === s)
+    private def sortedSmall(df: DataFrame, by: String): DataFrame =
+      df.coalesce(1).orderBy(by)
+    def epochsFor(s: Int): DataFrame = sortedSmall(metricsFor(s)
+      .select("epoch_idx", "sleep_stage", "is_in_sleep_period", "delta_moving_avg"), "epoch_idx")
+    def sleepPeriodEpochsFor(s: Int): DataFrame =
+      epochsFor(s).filter(col("is_in_sleep_period"))
+    def hypnogramFor(s: Int): DataFrame = {
+      val pos = Seq("W", "REM", "N1", "N2", "N3").zipWithIndex.foldLeft(lit(null).cast("int")) {
+        case (acc, (stage, i)) => when(col("sleep_stage") === stage, lit(i)).otherwise(acc)
+      }
+      sortedSmall(metricsFor(s)
+        .filter(col("is_in_sleep_period"))
+        .select(
+          ((col("epoch_idx") - col("sleep_onset_epoch_idx")) * 0.5).as("minutes_after_onset"),
+          pos.as("stage_position"),
+          col("sleep_stage")), "minutes_after_onset")
+    }
+
+    /** Asserts each epoch read of `reads` equals its formula for `s`. */
+    def assertEpochReads(what: String, reads: SleepReads, s: Int): Unit = {
+      assertSameRead(s"epochsFor($s)$what", reads.epochsFor(s), epochsFor(s))
+      assertSameRead(s"sleepPeriodEpochsFor($s)$what", reads.sleepPeriodEpochsFor(s),
+        sleepPeriodEpochsFor(s))
+      assertSameRead(s"hypnogramFor($s)$what", reads.hypnogramFor(s), hypnogramFor(s))
+    }
   }
 
   /** Asserts equal rows, row order and schema (names, types, nullability). */
@@ -173,6 +189,42 @@ class SleepReadsSpec extends SparkSpec {
     assert(reads.summaryFor(999).collect().isEmpty)
   }
 
+  test("epoch snapshot reads equal the Spark formulas they replace") {
+    val d = tmpDir("reads-epochs")
+    val wh = new Warehouse(spark, d)
+    val seed = SeedData.dataFrame(spark, subjects = 5)
+    // Awake the whole recording: a null onset and no in-period epochs.
+    val allWake = seed.filter(col("subject_id") === 0)
+      .withColumn("subject_id", lit(99)).withColumn("stage", lit("W"))
+    wh.loadEpochs(seed.unionByName(allWake))
+    JobRunner.transform(spark, wh.readEpochs(), gapEpochs = 120, d)
+    // The same marts with sleep_metrics rewritten round-robin into three
+    // files, so every subject's rows span several files and partitions.
+    val spread = tmpDir("reads-epochs-spread")
+    Seq("sleep_summary", "sleep_metrics").foreach { mart =>
+      val df = spark.read.parquet(s"$d/$mart")
+      (if (mart == "sleep_metrics") df.repartition(3) else df)
+        .write.mode("overwrite").parquet(s"$spread/$mart")
+    }
+    val partitionsPerSubject = spark.read.schema(Schemas.sleepMetrics)
+      .parquet(s"$spread/sleep_metrics")
+      .select(col("subject_id"), spark_partition_id().as("p"))
+      .groupBy("subject_id").agg(countDistinct("p").as("n"))
+      .agg(min("n")).head().getLong(0)
+    assert(partitionsPerSubject > 1, "the spread copy keeps a subject in one partition")
+
+    Seq(d, spread).foreach { root =>
+      val reads = new SleepReads(spark, root)
+      val ref = new SparkFormulas(root)
+      val ids = ref.subjects().collect().map(_.getInt(0)).toSeq
+      assert(ids.size == 6 && ids.contains(99))
+      (ids :+ 999).foreach(s => ref.assertEpochReads(s" in $root", reads, s))
+      assert(reads.epochsFor(99).collect().nonEmpty)
+      assert(reads.hypnogramFor(99).collect().isEmpty)
+      assert(reads.epochsFor(999).collect().isEmpty)
+    }
+  }
+
   test("a rewritten mart is re-read; a deleted one fails") {
     val d = tmpDir("reads-fresh")
     val wh = new Warehouse(spark, d)
@@ -182,6 +234,9 @@ class SleepReadsSpec extends SparkSpec {
     assert(reads.subjects().collect().map(_.getInt(0)).toSeq == Seq(0, 1))
     assert(reads.summaryFor(1).collect().length == 1)
     assert(reads.bandPowersFor(1).collect().length == 5)
+    assert(reads.epochsFor(1).collect().nonEmpty)
+    assert(reads.sleepPeriodEpochsFor(1).collect().nonEmpty)
+    assert(reads.hypnogramFor(1).collect().nonEmpty)
 
     // Same directory, different subjects: subject 1's epochs as subject 11.
     JobRunner.transform(spark, wh.readEpochs().filter(col("subject_id") === 1)
@@ -195,13 +250,21 @@ class SleepReadsSpec extends SparkSpec {
     }
     assert(reads.summaryFor(11).collect().length == 1)
     assert(reads.summaryFor(1).collect().isEmpty)
+    Seq(1, 11).foreach(s => ref.assertEpochReads(" after rewrite", reads, s))
+    assert(reads.epochsFor(11).collect().nonEmpty)
+    assert(reads.epochsFor(1).collect().isEmpty)
 
-    val mart = new Path(s"$d/sleep_summary")
-    assert(mart.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(mart, true))
+    Seq("sleep_summary", "sleep_metrics").foreach { m =>
+      val mart = new Path(s"$d/$m")
+      assert(mart.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(mart, true))
+    }
     Seq[(String, () => DataFrame)](
       "subjects" -> (() => reads.subjects()),
       "summaryFor" -> (() => reads.summaryFor(11)),
-      "bandPowersFor" -> (() => reads.bandPowersFor(11))).foreach { case (name, read) =>
+      "bandPowersFor" -> (() => reads.bandPowersFor(11)),
+      "epochsFor" -> (() => reads.epochsFor(11)),
+      "sleepPeriodEpochsFor" -> (() => reads.sleepPeriodEpochsFor(11)),
+      "hypnogramFor" -> (() => reads.hypnogramFor(11))).foreach { case (name, read) =>
       withClue(name)(intercept[java.io.FileNotFoundException](read().collect()))
     }
   }
