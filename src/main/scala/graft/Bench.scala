@@ -1,4 +1,8 @@
 package graft
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entrypoint. Times every registry query on
@@ -11,10 +15,49 @@ import org.apache.spark.sql.SparkSession
   * largest error bar — the round-4 driver capture showed d1_lsh_neardup at
   * 8.06 s purely from host noise (steady-state re-measures: 2.3-2.4 s); the
   * median of three collapses that noise without hiding real regressions.
-  * Per-query min/max land in the `bench_latest.json` file artifact.
+  * Per-query min/max and the Spark job count of the last timed pass land in
+  * the `bench_latest.json` file artifact, with the summed job count and the
+  * cpus the run planned at: job counts are host-independent, so they are
+  * the number to compare across runs.
   */
 object Bench {
   private def round3(v: Double): Double = math.rint(v * 1000) / 1000
+
+  /** One query's timed passes: median/min/max seconds (all -1 when a pass
+    * failed) and the Spark jobs its last timed pass ran (-1 on failure).
+    */
+  private final case class Result(med: Double, min: Double, max: Double,
+      jobs: Int)
+
+  private val SentinelGroup = "bench-sentinel"
+
+  /** Counts every job the session starts. [[drain]] runs a one-task
+    * sentinel job and waits for the listener to see it: listener events
+    * arrive in submission order, so every job started before the sentinel
+    * has been counted by then, with no sleep. Returns the jobs since the
+    * previous drain.
+    */
+  private final class JobCounter(spark: SparkSession) {
+    private val jobs = new AtomicInteger(0)
+    private val marks = new LinkedBlockingQueue[Integer]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val group = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        if (group.contains(SentinelGroup)) marks.put(jobs.getAndSet(0))
+        else jobs.incrementAndGet()
+      }
+    })
+
+    def drain(): Int = {
+      val sc = spark.sparkContext
+      sc.setJobGroup(SentinelGroup, "job-count drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val n = marks.poll(60, TimeUnit.SECONDS)
+      require(n != null, "listener never saw the sentinel job")
+      n
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -25,7 +68,7 @@ object Bench {
       builder.config(k, v)
     })
     val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
+    spark.sparkContext.setLogLevel("WARN")
     // Warm-up outside the timed region: JVM/codegen/parquet-reader init is
     // engine startup, not query cost.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -74,26 +117,21 @@ object Bench {
         sys.exit(2)
       }
     }
-    // One untimed warm pass per query (codegen compilation + JIT are engine
-    // warm-up, not query cost). Disable with SPARK_GRAFT_COLD=1 to measure
-    // cold-start instead (which also drops to a single timed pass).
-    val warmRuns = !sys.env.contains("SPARK_GRAFT_COLD")
-    val passes =
-      if (!warmRuns) 1
-      else sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
+    val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")
-    def writeArtifact(rs: Seq[(String, (Double, Double, Double))],
-        partial: Boolean): Unit = {
-      val qs = rs.map { case (k, (med, _, _)) =>
-        "\"" + k + "\":" + round3(med)
+    def entry(k: String, v: Any): String = "\"" + k + "\":" + v
+    def queriesJson(rs: Seq[(String, Result)]): String =
+      rs.map { case (k, r) => entry(k, round3(r.med)) }.mkString(",")
+    def total(rs: Seq[(String, Result)]): Double =
+      round3(rs.map(_._2.med).filter(_ >= 0).sum)
+    def writeArtifact(rs: Seq[(String, Result)], partial: Boolean): Unit = {
+      val detail = rs.map { case (k, r) =>
+        entry(k, s"""{"median":${round3(r.med)},"min":${round3(r.min)},""" +
+          s""""max":${round3(r.max)},"jobs":${r.jobs}}""")
       }.mkString("{", ",", "}")
-      val total = round3(rs.map(_._2._1).filter(_ >= 0).sum)
-      val detail = rs.map { case (k, (med, mn, mx)) =>
-        "\"" + k + "\":{\"median\":" + round3(med) + ",\"min\":" + round3(mn) +
-          ",\"max\":" + round3(mx) + "}"
-      }.mkString("{", ",", "}")
+      val jobs = rs.map(_._2.jobs).filter(_ >= 0).sum
       val fileJson =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"stat":"median","partial":$partial,"detail":$detail}"""
+        s"""{"metric":"total","value":${total(rs)},"unit":"sec","queries":{${queriesJson(rs)}},"sf":"$sfDir","passes":$passes,"stat":"median","partial":$partial,"jobs":$jobs,"cpus":${Sessions.cpus},"detail":$detail}"""
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(out),
           (fileJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -102,15 +140,16 @@ object Bench {
           System.err.println(s"[bench] could not write $out: ${e.getMessage}")
       }
     }
-    val acc = scala.collection.mutable.ArrayBuffer
-      .empty[(String, (Double, Double, Double))]
+    val counter = new JobCounter(spark)
+    val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Result)]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) && subset.forall(_(n)) }
       .map { case (name, fn) =>
-        if (warmRuns) {
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-        }
-        val times = (1 to passes).map { _ =>
+        // One untimed warm pass per query (codegen compilation + JIT are
+        // engine warm-up, not query cost); its jobs are drained uncounted.
+        try { fn(spark, sfDir).count() } catch { case _: Throwable => }
+        counter.drain()
+        val timed = (1 to passes).map { _ =>
           // Each timed pass starts from a clean slate: no cached blocks left
           // behind by earlier queries/passes (their persist() calls would
           // otherwise squat on storage memory and make pass 2 measure cache
@@ -128,13 +167,15 @@ object Bench {
                 s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
               false
           }
-          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+          val secs = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+          (secs, counter.drain()) // the drain's sentinel runs after the clock
         }
+        val times = timed.map(_._1)
         val r =
-          if (times.contains(-1.0)) name -> (-1.0, -1.0, -1.0)
+          if (times.contains(-1.0)) name -> Result(-1.0, -1.0, -1.0, -1)
           else {
             val s = times.sorted
-            name -> (s(s.length / 2), s.head, s.last) // (median, min, max)
+            name -> Result(s(s.length / 2), s.head, s.last, timed.last._2)
           }
         // Checkpoint the artifact after EVERY query (marked partial): a
         // median-of-3 full-registry run takes ~10 min, and a run killed by
@@ -144,12 +185,8 @@ object Bench {
         writeArtifact(acc.toSeq, partial = true)
         r
       }
-    val qs = results.map { case (k, (med, _, _)) =>
-      "\"" + k + "\":" + round3(med)
-    }.mkString("{", ",", "}")
-    val total = round3(results.map(_._2._1).filter(_ >= 0).sum)
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passes,"stat":"median"}"""
+      s"""{"metric":"total","value":${total(results)},"unit":"sec","queries":{${queriesJson(results)}},"sf":"$sfDir","passes":$passes,"stat":"median"}"""
     // The compact line goes out FIRST (and is this program's primary stdout
     // output): the driver scrapes sbt's stdout and has truncated long tails
     // before — leading with the payload gives the scrape its best chance.
@@ -169,22 +206,19 @@ object Bench {
     // unparseable 133-query one). BENCH_r14 `parsed` carried 49 queries
     // inside the old 1200 budget; this lifts the driver's round-over-round
     // PERF coverage to the slowest ~62 without risking the parse.
-    val slowest = results.filter(_._2._1 >= 0).sortBy(-_._2._1)
-    val keptQs = new StringBuilder
+    val slowest = results.filter(_._2.med >= 0).sortBy(-_._2.med)
     var used = 0
-    var omitted = 0
-    slowest.foreach { case (k, (med, _, _)) =>
-      val ent = "\"" + k + "\":" + round3(med)
-      if (used + ent.length <= 1560) {
-        if (used > 0) keptQs.append(',')
-        keptQs.append(ent); used += ent.length + 1
-      } else omitted += 1
+    val kept = slowest.filter { q =>
+      val len = queriesJson(Seq(q)).length
+      val fits = used + len <= 1560
+      if (fits) used += len + 1
+      fits
     }
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":{$keptQs},"queries_omitted":$omitted,"detail_file":"$out","sf":"$sfDir","passes":$passes,"stat":"median"}""")
+      s"""{"metric":"total","value":${total(results)},"unit":"sec","queries":{${queriesJson(kept)}},"queries_omitted":${slowest.size - kept.size},"detail_file":"$out","sf":"$sfDir","passes":$passes,"stat":"median"}""")
     // Final durable copy with the full per-query spread (median/min/max
-    // over the timed passes), partial=false — the stdout line stays in the
-    // driver's expected {"queries":{name:sec}} shape.
+    // over the timed passes) and job counts, partial=false — the stdout
+    // line stays in the driver's expected {"queries":{name:sec}} shape.
     writeArtifact(results, partial = false)
     spark.stop()
   }

@@ -103,10 +103,6 @@ object PlanAudit {
             else fingerprint(df)
           println(f"$name%-28s exch=${f.exchanges} bhj=${f.bhj} smj=${f.smj} " +
             f"bnlj=${f.bnlj} pushedFilters=${f.pushedFilters} codegenSpans=${f.codegenSpans}")
-          if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-            println(df.queryExecution.executedPlan.toString()
-              .linesIterator.take(80).mkString("\n"))
-          }
         } catch {
           case e: Exception => println(s"$name FAILED: ${e.getMessage}")
         }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-default session configuration shared by every entrypoint
-  * (Bench / Verify / JobProf / PlanAudit / PlanDump / ScaleCheck /
-  * IngestProf and the test session). These are SCALE-ADAPTIVE settings —
+  * (Bench / Verify / PlanAudit / PlanDump / ScaleCheck, perfbench's
+  * harness and the test session). These are SCALE-ADAPTIVE settings —
   * both delegate the actual sizing decision to AQE's runtime statistics,
   * so the same values are right at sf0.1 on local[32] and on a 100 TB
   * cluster; neither encodes a local constant.
@@ -41,7 +41,7 @@ object Sessions {
 
   /** The core count every CLI entry point runs at: `SPARK_GRAFT_CPUS`,
     * else the host's available processors. Read once here, so Bench,
-    * Verify, PlanDump and the profilers plan at the same width.
+    * Verify, PlanDump and ScaleCheck plan at the same width.
     */
   val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)

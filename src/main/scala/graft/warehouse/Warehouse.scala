@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * `sleep_epochs` is partitioned by subject_id directory, so a subject
   * predicate on it prunes to one directory. The marts the dashboard reads
   * (S11) are written by the model DAG as hash-partitioned files, not
-  * directories; their point reads scan every file of the mart.
+  * directories; a reader scans each mart once to load its snapshot and
+  * then serves point reads from memory.
   */
 final class Warehouse(spark: SparkSession, root: String) {
 
@@ -30,18 +31,19 @@ final class Warehouse(spark: SparkSession, root: String) {
   /** SLEEP_EPOCHS schema incl. the LOAD_TIMESTAMP default
     * (`duckdb_client.py:33-45`).
     */
+  private def withDefaults(epochs: DataFrame): DataFrame = epochs.select(
+    col("subject_id").cast("int"),
+    col("epoch_idx").cast("int"),
+    col("stage").cast("string"),
+    col("delta_power").cast("double"),
+    col("theta_power").cast("double"),
+    col("alpha_power").cast("double"),
+    col("sigma_power").cast("double"),
+    col("beta_power").cast("double"),
+    current_timestamp().as("load_timestamp"))
+
   def loadEpochs(epochs: DataFrame, overwrite: Boolean = true): Unit = {
-    val withDefaults = epochs.select(
-      col("subject_id").cast("int"),
-      col("epoch_idx").cast("int"),
-      col("stage").cast("string"),
-      col("delta_power").cast("double"),
-      col("theta_power").cast("double"),
-      col("alpha_power").cast("double"),
-      col("sigma_power").cast("double"),
-      col("beta_power").cast("double"),
-      current_timestamp().as("load_timestamp"))
-    withDefaults.write
+    withDefaults(epochs).write
       .partitionBy("subject_id")
       // Dynamic mode: Overwrite replaces ONLY the partitions present in the
       // incoming frame (the loaded subjects), never the whole table.
@@ -61,17 +63,7 @@ final class Warehouse(spark: SparkSession, root: String) {
     */
   def loadEpochsBucketed(epochs: DataFrame, table: String = "sleep_epochs_bucketed",
       buckets: Int = 32): Unit = {
-    epochs.select(
-      col("subject_id").cast("int"),
-      col("epoch_idx").cast("int"),
-      col("stage").cast("string"),
-      col("delta_power").cast("double"),
-      col("theta_power").cast("double"),
-      col("alpha_power").cast("double"),
-      col("sigma_power").cast("double"),
-      col("beta_power").cast("double"),
-      current_timestamp().as("load_timestamp"))
-      .write
+    withDefaults(epochs).write
       .bucketBy(buckets, "subject_id")
       .sortBy("subject_id", "epoch_idx")
       .mode(SaveMode.Overwrite)

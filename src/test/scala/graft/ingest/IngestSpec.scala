@@ -62,20 +62,36 @@ class IngestSpec extends SparkSpec {
     System.arraycopy("99999999".getBytes("US-ASCII"), 0, hostile, 236, 8)
     val hostilePsg = s"$dir/hostile_psg.edf"
     java.nio.file.Files.write(java.nio.file.Paths.get(hostilePsg), hostile)
+    // Subject 97: a healthy PSG with a hypnogram whose first TAL onset
+    // reads "+q…" — a malformed annotation field, not a malformed header.
+    val talHyp = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(refs.head.hypnoPath))
+    var i = new String(talHyp, 184, 8, "US-ASCII").trim.toInt
+    while (talHyp(i) != '+') i += 1
+    talHyp(i + 1) = 'q'.toByte
+    val badTalHyp = s"$dir/bad_tal_hyp.edf"
+    java.nio.file.Files.write(java.nio.file.Paths.get(badTalHyp), talHyp)
     val all = refs :+ RecordingRef(99, badPsg, badPsg) :+
-      RecordingRef(98, hostilePsg, hostilePsg)
+      RecordingRef(98, hostilePsg, hostilePsg) :+
+      RecordingRef(97, refs.head.psgPath, badTalHyp)
 
     val extracted = Ingest.extract(spark, all).persist()
     val epochs = Ingest.epochsOf(extracted)
     val errors = Ingest.errorsOf(extracted).collect()
 
     assert(epochs.select("subject_id").distinct().count() == 2)
-    assert(errors.length == 2)
+    assert(errors.length == 3)
     val bySubject = errors.map(r =>
       r.getAs[Int]("subject_id") -> r.getAs[String]("error_message")).toMap
-    assert(bySubject.keySet == Set(98, 99))
+    assert(bySubject.keySet == Set(97, 98, 99))
     assert(bySubject(98).contains("payload holds"), bySubject(98))
+    assert(bySubject(97).contains("malformed TAL onset"), bySubject(97))
     assert(errors.forall(_.getAs[String]("error_type").nonEmpty))
+    // The failures leave the healthy subjects' rows exactly as a run over
+    // the healthy refs alone produces them.
+    val clean = Ingest.epochsOf(Ingest.extract(spark, refs))
+    assert(epochs.exceptAll(clean).count() == 0)
+    assert(clean.exceptAll(epochs).count() == 0)
     extracted.unpersist()
   }
 
@@ -91,13 +107,18 @@ class IngestSpec extends SparkSpec {
     val truncPsg = s"$dir/trunc_psg.edf"
     java.nio.file.Files.write(java.nio.file.Paths.get(truncPsg),
       psgB.dropRight(150))
-    val all = refs :+ RecordingRef(5, truncPsg, refs.head.hypnoPath)
+    // Subject 6: garbage that no mode can salvage.
+    val garbagePsg = s"$dir/garbage_psg.edf"
+    java.nio.file.Files.write(java.nio.file.Paths.get(garbagePsg),
+      "not an edf at all".getBytes("US-ASCII"))
+    val all = refs :+ RecordingRef(5, truncPsg, refs.head.hypnoPath) :+
+      RecordingRef(6, garbagePsg, refs.head.hypnoPath)
 
     // Strict default: the truncated subject is a per-file error (exact
     // V8 accounting).
     val strict = Ingest.extract(spark, all).persist()
     assert(Ingest.errorsOf(strict).select("subject_id")
-      .as[Int].collect().toSeq == Seq(5))
+      .as[Int].collect().toSeq.sorted == Seq(5, 6))
     strict.unpersist()
 
     // Lenient: complete records salvage, the epoching tmax guard clips
@@ -109,10 +130,13 @@ class IngestSpec extends SparkSpec {
     val metrics = Ingest.ExtractMetrics(spark)
     val lenient =
       Ingest.extract(spark, all, Some(metrics), lenient = true).persist()
-    val warnings = Ingest.errorsOf(lenient).collect()
+    val (warnings, failures) = Ingest.errorsOf(lenient).collect()
+      .partition(_.getAs[String]("error_type") == Ingest.SalvageWarningType)
+    // The garbage PSG is still a real error next to the salvage warning.
+    assert(failures.map(_.getAs[Int]("subject_id")).toSeq == Seq(6),
+      failures.mkString("; "))
     assert(warnings.length == 1, warnings.mkString("; "))
     assert(warnings(0).getAs[Int]("subject_id") == 5)
-    assert(warnings(0).getAs[String]("error_type") == Ingest.SalvageWarningType)
     assert(warnings(0).getAs[String]("error_message")
       .contains("1 truncated record(s) dropped"),
       warnings(0).getAs[String]("error_message"))
@@ -123,6 +147,7 @@ class IngestSpec extends SparkSpec {
     assert(metrics.skippedTals.value == 0L)
     val intact = rows.filter(_.subject_id == refs.head.subjectId)
       .map(r => r.epoch_idx -> r.copy(subject_id = 5)).toMap
+    assert(!rows.exists(_.subject_id == 6), "the garbage subject loaded epochs")
     val salvaged = rows.filter(_.subject_id == 5)
     assert(salvaged.nonEmpty && salvaged.length >= intact.size - 1,
       s"salvaged ${salvaged.length} of ${intact.size} epochs")
