@@ -141,23 +141,27 @@ object Bench {
       }
     }
     val counter = new JobCounter(spark)
+    // Every pass, the warm one included, starts from a clean slate: no
+    // cached blocks left behind by earlier queries/passes (their persist()
+    // calls would otherwise squat on storage memory, re-cache plans already
+    // cached, and make pass 2 measure cache hits, not the engine) and no
+    // carried garbage — the GC runs OUTSIDE the timed region so pass k
+    // doesn't pay for pass k-1's allocations.
+    def cleanSlate(): Unit = {
+      spark.sharedState.cacheManager.clearCache()
+      System.gc()
+    }
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Result)]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) && subset.forall(_(n)) }
       .map { case (name, fn) =>
         // One untimed warm pass per query (codegen compilation + JIT are
         // engine warm-up, not query cost); its jobs are drained uncounted.
+        cleanSlate()
         try { fn(spark, sfDir).count() } catch { case _: Throwable => }
         counter.drain()
         val timed = (1 to passes).map { _ =>
-          // Each timed pass starts from a clean slate: no cached blocks left
-          // behind by earlier queries/passes (their persist() calls would
-          // otherwise squat on storage memory and make pass 2 measure cache
-          // hits, not the engine) and no carried garbage — the GC runs
-          // OUTSIDE the timed region so pass k doesn't pay for pass k-1's
-          // allocations.
-          spark.sharedState.cacheManager.clearCache()
-          System.gc()
+          cleanSlate()
           // A failing pass reports -1, loudly — never its time-to-exception
           // masquerading as a legitimate duration.
           val t0 = System.nanoTime()

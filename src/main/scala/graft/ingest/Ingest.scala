@@ -66,29 +66,23 @@ object Ingest {
     */
   def parsePsgPicked(bytes: Array[Byte],
       lenient: Boolean = false): Edf.EdfFile = {
-    val hdr = Edf.parseHeader(bytes)
-    val renamed: Map[String, String] =
-      hdr.channelNames.map(n => n -> ChannelRename.getOrElse(n, n)).toMap
-    val eeg = hdr.channelNames.filter(n =>
-      renamed(n).contains("EEG") && !NonEegChannels.contains(renamed(n)))
-    val picked = if (eeg.nonEmpty) eeg else hdr.channelNames
+    val picked = eegPicks(Edf.parseHeader(bytes).channelNames).map(_._1)
     Edf.parseSignals(bytes, picked.toSet, lenient)
+  }
+
+  /** EEG picks as (name, renamed): renamed contains "EEG" and is not a retyped
+    * non-EEG channel; else all channels rather than failing (processing.py:77-87). */
+  private def eegPicks(names: Vector[String]): Vector[(String, String)] = {
+    val renamed = names.map(n => n -> ChannelRename.getOrElse(n, n))
+    val eeg = renamed.filter { case (_, r) =>
+      r.contains("EEG") && !NonEegChannels.contains(r) }
+    if (eeg.nonEmpty) eeg else renamed
   }
 
   /** Pure kernel: one parsed recording pair → epoch rows. */
   def extractRecording(subjectId: Int, psg: Edf.EdfFile,
       hypno: Edf.EdfFile): ExtractResult = {
-    val renamed: Map[String, String] =
-      psg.channelNames.map(n => n -> ChannelRename.getOrElse(n, n)).toMap
-
-    // EEG picks: renamed name contains "EEG" and is not a retyped non-EEG
-    // channel; fall back to all channels rather than failing (processing.py:77-87).
-    val names = psg.channelNames
-    val eegNames = names.filter(n =>
-      renamed(n).contains("EEG") && !NonEegChannels.contains(renamed(n)))
-    val picked = if (eegNames.nonEmpty) eegNames else names
-    val pickedRenamed = picked.map(renamed)
-
+    val (picked, pickedRenamed) = eegPicks(psg.channelNames).unzip
     val sfreq = psg.sfreq(picked.head)
     val signals = picked.map(psg.signals)
     val nSamples = signals.head.length.toLong

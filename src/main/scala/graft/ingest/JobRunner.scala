@@ -1,7 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, count_distinct, lit, when}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.sleep.SleepModels
 import graft.warehouse.Warehouse
@@ -43,8 +43,10 @@ object JobRunner {
         s"invalid subject range [${cfg.startingSubject}, ${cfg.endingSubject})")
   }
 
-  /** Run extraction + load + transform over the given recordings. */
+  /** Run extraction + load + transform over the given recordings; the
+    * error rows are evaluated once and the row counts come from the writes. */
   def run(spark: SparkSession, cfg: JobConfig, refs: Seq[RecordingRef]): JobReport = {
+    import spark.implicits._
     validateConfig(cfg)
     val wh = new Warehouse(spark, cfg.warehouseDir)
 
@@ -56,28 +58,22 @@ object JobRunner {
     try {
       val (validEpochs, contractErrors) =
         Validation.validateBySubject(Ingest.epochsOf(extracted))
-      val parseErrors = Ingest.errorsOf(extracted)
-
-      val allErrors = parseErrors.unionByName(contractErrors)
+      // At most about two error rows per recording: collected once.
+      val errors = Ingest.errorsOf(extracted).unionByName(contractErrors)
+        .as[IngestError].collect()
       // SALVAGE_WARNING rows are observability, not failures: the subject's
-      // epochs were extracted (contract validation may still drop them,
-      // which shows up as its own row). Log every row (warnings stay queryable in
-      // INGESTION_ERRORS) but count only real failures toward the
-      // all-failed abort and the report.
-      val counts = allErrors.agg(
-        count_distinct(when(col("error_type") =!= Ingest.SalvageWarningType,
-          col("subject_id"))).as("failed"),
-        count(lit(1)).as("rows")).head()
-      val nFailed = counts.getLong(0)
-      if (counts.getLong(1) > 0) wh.logErrors(allErrors)
+      // epochs were extracted (contract validation may still drop them, as
+      // its own row). Log every row, but count only real failures.
+      val nFailed = errors.filter(_.error_type != Ingest.SalvageWarningType)
+        .map(_.subject_id).distinct.length.toLong
+      if (errors.nonEmpty) wh.logErrors(errors.toSeq.toDF())
 
       // All-failed ⇒ abort before transform (pipeline.py:259-260).
-      if (nFailed.toInt >= refs.size)
+      if (nFailed >= refs.size)
         throw new IllegalStateException(
           s"all $nFailed subjects failed extraction; aborting transform")
 
-      wh.loadEpochs(validEpochs, overwrite = true)
-      val epochsLoaded = wh.readEpochs().count()
+      val epochsLoaded = written(validEpochs)(wh.loadEpochs(_, overwrite = true))
       if (metrics.dropped.value > 0)
         // processing.py:173-180's per-subject drop log, summarized.
         graft.Log.info(f"[ingest] dropped ${metrics.dropped.value}/" +
@@ -96,9 +92,11 @@ object JobRunner {
   }
 
   /** The dbt model DAG (§3.2): staging/metrics stay lazy (views), marts are
-    * materialized, data tests interleave fail-fast. `sleep_metrics` feeds
-    * both marts, so it is cached for the duration of the two writes —
-    * mirroring dbt building the shared intermediate once.
+    * materialized and counted by their writes. Each test battery is one
+    * aggregate, run fail-fast (V7) before anything builds on its model: the
+    * summary is tested before it is written. `sleep_metrics` feeds both
+    * other marts, so it is cached for the three writes, as dbt builds the
+    * shared intermediate once.
     */
   def transform(spark: SparkSession, epochs: DataFrame, gapEpochs: Int,
       outDir: String): Map[String, Long] = {
@@ -106,20 +104,21 @@ object JobRunner {
     Validation.requireAll(Validation.stagingChecks(staged))
 
     val metrics = SleepModels.sleepMetrics(staged, gapEpochs).persist()
+    def mart(name: String, df: DataFrame): (String, Long) =
+      name -> written(df)(_.write.mode("overwrite").parquet(s"$outDir/$name"))
     try {
-      metrics.write.mode("overwrite").parquet(s"$outDir/sleep_metrics")
-
+      val metricsRows = mart("sleep_metrics", metrics)
       val summary = SleepModels.sleepSummary(metrics)
       Validation.requireAll(Validation.summaryChecks(summary))
-      summary.write.mode("overwrite").parquet(s"$outDir/sleep_summary")
-
-      val features = SleepModels.sleepFeatures(metrics)
-      features.write.mode("overwrite").parquet(s"$outDir/sleep_features")
-
-      Map(
-        "sleep_metrics" -> spark.read.parquet(s"$outDir/sleep_metrics").count(),
-        "sleep_summary" -> spark.read.parquet(s"$outDir/sleep_summary").count(),
-        "sleep_features" -> spark.read.parquet(s"$outDir/sleep_features").count())
+      Map(metricsRows, mart("sleep_summary", summary),
+        mart("sleep_features", SleepModels.sleepFeatures(metrics)))
     } finally metrics.unpersist()
+  }
+
+  /** Runs `write` on `df`; returns the rows it wrote, observed on the write. */
+  private def written(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
   }
 }

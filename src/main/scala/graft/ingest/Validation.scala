@@ -8,20 +8,17 @@ import org.apache.spark.sql.functions._
   * dbt schema tests (V2–V6, `models/schema.yml:4-79`), and fail-fast gating
   * (V7, `pipeline.py:169-173`).
   *
-  * Each check builds a violation DataFrame lazily; `require*` forms count it
-  * and throw, which is how the job runner interleaves model materialization
-  * with its tests exactly as `dbt build` does. All checks are single
-  * aggregations — no collects of data rows, safe at any scale.
+  * Each model's dbt tests form one [[Validation.Tests]] battery, and
+  * `requireAll` evaluates the whole battery as one aggregate and throws on
+  * its first failing test: that is how the job runner tests each model
+  * right after building it, as `dbt build` does. No data rows are
+  * collected, so a battery is safe at any scale.
   */
 object Validation {
 
   val ValidStages: Seq[String] = Seq("W", "N1", "N2", "N3", "REM")
   val PowerCols: Seq[String] =
     Seq("delta_power", "theta_power", "alpha_power", "sigma_power", "beta_power")
-
-  final case class CheckResult(name: String, violations: Long) {
-    def ok: Boolean = violations == 0L
-  }
 
   /** V1 — the Pandera contract on raw epoch rows: non-null ids, stage in the
     * canonical five, power values non-null and non-NaN (negative dB is
@@ -55,57 +52,61 @@ object Validation {
     (valid, errors)
   }
 
-  // ---- dbt schema tests (V2–V6) as violation counters ----
+  // ---- dbt schema tests (V2–V6) as one battery per model ----
 
-  def notNull(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.filter(cols.map(col(_).isNull).reduce(_ || _))
+  /** One model's schema tests in declaration order, each a named aggregate
+    * counting a `key` group's violations; a test's result sums all groups. */
+  final case class Tests(model: DataFrame, key: String,
+      tests: Seq[(String, Column)])
 
-  def unique(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.groupBy(cols.map(col): _*).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
+  /** A row test: the rows for which `violates` is true (null is not). */
+  private def rowsWhere(violates: Column): Column =
+    sum(when(violates, 1).otherwise(0))
 
-  def acceptedValues(df: DataFrame, c: String, values: Seq[String]): DataFrame =
-    df.filter(!col(c).isin(values: _*))
+  /** dbt `unique`: one violation per key group of 2+ rows (nulls are one). */
+  private val duplicateKey: Column = when(count(lit(1)) > 1, 1).otherwise(0)
 
-  def expressionIsTrue(df: DataFrame, expr: Column): DataFrame =
-    df.filter(!coalesce(expr, lit(false)))
-
-  def acceptedRange(df: DataFrame, c: String, min: Double, max: Double): DataFrame =
-    df.filter(col(c).isNotNull && !col(c).between(min, max))
+  /** dbt `expression_is_true`: a null outcome is a violation. */
+  private def untrue(expr: Column): Column = !coalesce(expr, lit(false))
 
   /** schema.yml's full test battery for the staging model (V2/V3/V4). */
-  def stagingChecks(staged: DataFrame): Seq[(String, DataFrame)] = Seq(
-    "staging_not_null" -> notNull(staged, Seq(
+  def stagingChecks(staged: DataFrame): Tests = Tests(staged, "epoch_id", Seq(
+    "staging_not_null" -> rowsWhere(Seq(
       "epoch_id", "subject_id", "epoch_idx", "sleep_stage",
       "delta_power_uv", "theta_power_uv", "alpha_power_uv", "sigma_power_uv",
-      "beta_power_uv")),
-    "staging_unique_epoch_id" -> unique(staged, Seq("epoch_id")),
+      "beta_power_uv").map(col(_).isNull).reduce(_ || _)),
+    "staging_unique_epoch_id" -> duplicateKey,
     "staging_accepted_stages" ->
-      acceptedValues(staged, "sleep_stage", ValidStages))
+      rowsWhere(!col("sleep_stage").isin(ValidStages: _*))))
 
   /** schema.yml's tests for the summary mart (V3/V5/V6,
     * `models/schema.yml:47-79`): unique subject, TST ≤ sleep period, stage
     * shares sum to 1 ± 1e-4 (guarded when no sleep), efficiency ∈ [0,1].
     */
-  def summaryChecks(summary: DataFrame): Seq[(String, DataFrame)] = Seq(
-    "summary_unique_subject" -> unique(summary, Seq("subject_id")),
-    "summary_tst_le_period" -> expressionIsTrue(summary,
-      col("total_sleep_minutes") <= col("sleep_period_minutes")),
-    "summary_shares_sum_to_1" -> expressionIsTrue(summary,
+  def summaryChecks(summary: DataFrame): Tests = Tests(summary, "subject_id", Seq(
+    "summary_unique_subject" -> duplicateKey,
+    "summary_tst_le_period" -> rowsWhere(untrue(
+      col("total_sleep_minutes") <= col("sleep_period_minutes"))),
+    "summary_shares_sum_to_1" -> rowsWhere(untrue(
       col("total_sleep_minutes") === 0 ||
         abs(col("deep_sleep_percentage") + col("light_sleep_percentage") +
-          col("rem_sleep_percentage") - 1) < 0.0001),
+          col("rem_sleep_percentage") - 1) < 0.0001)),
     "summary_efficiency_range" ->
-      acceptedRange(summary, "sleep_efficiency", 0.0, 1.0))
+      rowsWhere(!col("sleep_efficiency").between(0.0, 1.0))))
 
-  /** V7 fail-fast gate: count every violation set, throw on the first
-    * non-empty one so dependents never build on bad data.
-    */
-  def requireAll(checks: Seq[(String, DataFrame)]): Seq[CheckResult] =
-    checks.map { case (name, violations) =>
-      val n = violations.count()
+  /** V7 fail-fast gate: one grouped aggregate (per key, then summed) runs
+    * the whole battery; the first failing test in declaration order throws,
+    * so dependents never build on bad data. An empty model passes. */
+  def requireAll(battery: Tests): Unit = {
+    val names = battery.tests.map(_._1)
+    val perKey = battery.tests.map { case (name, test) => test.as(name) }
+    val totals = battery.model.groupBy(battery.key)
+      .agg(perKey.head, perKey.tail: _*)
+      .agg(sum(names.head), names.tail.map(n => sum(n)): _*).head()
+    names.zipWithIndex.foreach { case (name, i) =>
+      val n = if (totals.isNullAt(i)) 0L else totals.getLong(i)
       if (n > 0) throw new IllegalStateException(
         s"data test failed: $name ($n violations)")
-      CheckResult(name, n)
     }
+  }
 }

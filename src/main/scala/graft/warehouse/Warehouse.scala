@@ -2,6 +2,9 @@ package graft.warehouse
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.Schemas
 
 /** Parquet warehouse with per-subject atomic replace — the Spark-native
   * restatement of the reference's `WarehouseClient` protocol (SURVEY §2.2):
@@ -28,22 +31,19 @@ final class Warehouse(spark: SparkSession, root: String) {
 
   spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-  /** SLEEP_EPOCHS schema incl. the LOAD_TIMESTAMP default
-    * (`duckdb_client.py:33-45`).
-    */
-  private def withDefaults(epochs: DataFrame): DataFrame = epochs.select(
-    col("subject_id").cast("int"),
-    col("epoch_idx").cast("int"),
-    col("stage").cast("string"),
-    col("delta_power").cast("double"),
-    col("theta_power").cast("double"),
-    col("alpha_power").cast("double"),
-    col("sigma_power").cast("double"),
-    col("beta_power").cast("double"),
-    current_timestamp().as("load_timestamp"))
+  /** `df` cast to a table's declared schema, with its two generated
+    * defaults, `uuid()` and `current_timestamp()` (`duckdb_client.py:33-56`). */
+  private def conform(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.toSeq.map { f =>
+      (f.name match {
+        case "error_id" => expr("uuid()")
+        case "load_timestamp" | "occurred_at" => current_timestamp()
+        case c => col(c).cast(f.dataType)
+      }).as(f.name)
+    }: _*)
 
   def loadEpochs(epochs: DataFrame, overwrite: Boolean = true): Unit = {
-    withDefaults(epochs).write
+    conform(epochs, Schemas.sleepEpochs).write
       .partitionBy("subject_id")
       // Dynamic mode: Overwrite replaces ONLY the partitions present in the
       // incoming frame (the loaded subjects), never the whole table.
@@ -51,7 +51,8 @@ final class Warehouse(spark: SparkSession, root: String) {
       .parquet(epochsPath)
   }
 
-  def readEpochs(): DataFrame = spark.read.parquet(epochsPath)
+  def readEpochs(): DataFrame =
+    spark.read.schema(Schemas.sleepEpochs).parquet(epochsPath)
 
   /** Bucketed variant: persists SLEEP_EPOCHS as a catalog table bucketed
     * (and sorted) by subject_id. Every model window and summary aggregation
@@ -63,7 +64,7 @@ final class Warehouse(spark: SparkSession, root: String) {
     */
   def loadEpochsBucketed(epochs: DataFrame, table: String = "sleep_epochs_bucketed",
       buckets: Int = 32): Unit = {
-    withDefaults(epochs).write
+    conform(epochs, Schemas.sleepEpochs).write
       .bucketBy(buckets, "subject_id")
       .sortBy("subject_id", "epoch_idx")
       .mode(SaveMode.Overwrite)
@@ -84,18 +85,12 @@ final class Warehouse(spark: SparkSession, root: String) {
     * (`duckdb_client.py:123-143`). Accepts a frame of
     * (subject_id, error_type, error_message, stack_trace).
     */
-  def logErrors(errors: DataFrame): Unit = {
-    errors.select(
-      expr("uuid()").as("error_id"),
-      col("subject_id").cast("int"),
-      col("error_type").cast("string"),
-      col("error_message").cast("string"),
-      col("stack_trace").cast("string"),
-      current_timestamp().as("occurred_at"))
+  def logErrors(errors: DataFrame): Unit =
+    conform(errors, Schemas.ingestionErrors)
       .write.mode(SaveMode.Append).parquet(errorsPath)
-  }
 
-  def readErrors(): DataFrame = spark.read.parquet(errorsPath)
+  def readErrors(): DataFrame =
+    spark.read.schema(Schemas.ingestionErrors).parquet(errorsPath)
 
   /** Small-file compaction — the maintenance pass every long-lived parquet
     * warehouse needs at scale: per-subject incremental loads leave one-or-

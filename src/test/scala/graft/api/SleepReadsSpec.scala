@@ -1,11 +1,6 @@
 package graft.api
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, countDistinct, lit, min, spark_partition_id, when}
@@ -73,33 +68,6 @@ class SleepReadsSpec extends SparkSpec {
     // Seeded beta centre is -1 dB: negatives exist and are legal.
     assert(d.getAs[Long]("negative_delta_rows") == 0)
     assert(new SleepReads(spark, dir).sample(3).count() == 3)
-  }
-
-  /** `f`'s result and the Spark jobs it started, counted by a listener on
-    * a job group. A sentinel job runs after `f`: listener events arrive in
-    * order, so once the sentinel's start is seen every job of `f` has been
-    * counted.
-    */
-  private def withJobs[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("reads-under-test", "point read")
-      val result = try f finally sc.clearJobGroup()
-      sc.setJobGroup("reads-sentinel", "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains("reads-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("reads-sentinel"), "listener never saw the sentinel job")
-      (result, groups.asScala.count(_ == "reads-under-test"))
-    } finally sc.removeSparkListener(listener)
   }
 
   test("point reads: one job per snapshot load, then none") {

@@ -1,8 +1,12 @@
 package graft.ingest
 
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.{Schemas, SparkSpec}
 import graft.warehouse.Warehouse
 
 class ValidationSpec extends SparkSpec {
@@ -42,6 +46,73 @@ class ValidationSpec extends SparkSpec {
       Validation.requireAll(Validation.stagingChecks(staged))
     }
     assert(e.getMessage.contains("staging_unique_epoch_id"))
+  }
+
+  /** A model frame of `schema`: one row per override map, every other
+    * column taken from `base`.
+    */
+  private def frame(schema: StructType, base: Map[String, Any],
+      rows: Seq[Map[String, Any]]): DataFrame = spark.createDataFrame(
+    rows.map(r => Row.fromSeq(schema.fieldNames.toSeq.map((base ++ r)(_)))).asJava,
+    schema)
+
+  private val stagingBase: Map[String, Any] = Map("subject_id" -> 1,
+    "epoch_idx" -> 0, "sleep_stage" -> "N2") ++
+    Seq("delta", "theta", "alpha", "sigma", "beta").map(b => s"${b}_power_uv" -> 1.0f)
+  /** A healthy summary row: TST ≤ period, shares sum to 1, efficiency 0.8. */
+  private val summaryBase: Map[String, Any] =
+    Schemas.sleepSummary.fieldNames.map(_ -> 1.0).toMap ++ Map(
+      "number_of_awakenings" -> 3L, "sleep_period_minutes" -> 420.0,
+      "total_sleep_minutes" -> 400.0, "sleep_efficiency" -> 0.8,
+      "deep_sleep_percentage" -> 0.2, "light_sleep_percentage" -> 0.6,
+      "rem_sleep_percentage" -> 0.2)
+
+  private def staged(rows: Map[String, Any]*) =
+    Validation.stagingChecks(frame(Schemas.staging, stagingBase, rows))
+  private def summary(rows: Map[String, Any]*) =
+    Validation.summaryChecks(frame(Schemas.sleepSummary, summaryBase, rows))
+  private def epoch(i: Int, kv: (String, Any)*) = Map("epoch_id" -> s"1-$i") ++ kv
+  private def subject(i: Int, kv: (String, Any)*) = Map("subject_id" -> i) ++ kv
+  private def only(name: String, battery: Validation.Tests) =
+    battery.copy(tests = battery.tests.filter(_._1 == name))
+
+  test("each data test fails alone with its name and violation count") {
+    val cases: Seq[(String, Validation.Tests, Option[String])] = Seq(
+      // One planted violation per test, in declaration order.
+      ("null power", staged(epoch(0), epoch(1, "delta_power_uv" -> null)),
+        Some("staging_not_null (1 violations)")),
+      ("key 3x is one violation", staged(epoch(0), epoch(1), epoch(1), epoch(1)),
+        Some("staging_unique_epoch_id (1 violations)")),
+      ("unknown stage", staged(epoch(0), epoch(1, "sleep_stage" -> "MOVE")),
+        Some("staging_accepted_stages (1 violations)")),
+      ("duplicate subject", summary(subject(1), subject(1)),
+        Some("summary_unique_subject (1 violations)")),
+      ("TST above period", summary(subject(1), subject(2, "total_sleep_minutes" -> 430.0)),
+        Some("summary_tst_le_period (1 violations)")),
+      ("shares sum to 1.1", summary(subject(1), subject(2, "rem_sleep_percentage" -> 0.3)),
+        Some("summary_shares_sum_to_1 (1 violations)")),
+      ("efficiency 1.5", summary(subject(1), subject(2, "sleep_efficiency" -> 1.5)),
+        Some("summary_efficiency_range (1 violations)")),
+      // Counts, order and nulls.
+      ("two unknown stages", staged(epoch(0, "sleep_stage" -> "NAN"),
+        epoch(1, "sleep_stage" -> "X")), Some("staging_accepted_stages (2 violations)")),
+      ("first failing test wins", staged(epoch(0), epoch(0, "epoch_idx" -> null)),
+        Some("staging_not_null (1 violations)")),
+      ("null keys form one group", summary(subject(1, "subject_id" -> null),
+        subject(2, "subject_id" -> null)), Some("summary_unique_subject (1 violations)")),
+      ("null TST is not true", summary(subject(1, "total_sleep_minutes" -> null)),
+        Some("summary_tst_le_period (1 violations)")),
+      ("null efficiency passes", summary(subject(1, "sleep_efficiency" -> null)), None),
+      ("null stage passes accepted_values", only("staging_accepted_stages",
+        staged(epoch(0, "sleep_stage" -> null))), None),
+      ("empty staging passes", staged(), None),
+      ("empty summary passes", summary(), None))
+    cases.foreach { case (name, battery, want) =>
+      val got = try { Validation.requireAll(battery); None } catch {
+        case e: IllegalStateException => Some(e.getMessage)
+      }
+      assert(got == want.map("data test failed: " + _), name)
+    }
   }
 }
 
@@ -125,6 +196,11 @@ class WarehouseSpec extends SparkSpec {
 }
 
 class JobRunnerSpec extends SparkSpec {
+  /** Jobs of one batch over 2 healthy recordings and 1 corrupt one, and
+    * how many of them run data tests.
+    */
+  private val JobBudget = 19
+  private val DataTestJobs = 4
 
   test("full pipeline: extract, validate, load, transform, marts + errors") {
     val dir = tmpDir("job")
@@ -150,6 +226,25 @@ class JobRunnerSpec extends SparkSpec {
     // Marts respect the dbt invariants (V5/V6).
     val summary = spark.read.parquet(s"$dir/warehouse/sleep_summary")
     Validation.requireAll(Validation.summaryChecks(summary))
+  }
+
+  test("the batch runs a pinned number of jobs; its row counts match a re-read") {
+    val dir = tmpDir("job-budget")
+    val refs = SyntheticSource.writeRecordings(s"$dir/raw", 2)
+    val badPath = s"$dir/raw/corrupt.edf"
+    java.nio.file.Files.write(java.nio.file.Paths.get(badPath), "garbage".getBytes)
+    val (report, sites) = withJobSites(JobRunner.run(spark,
+      JobRunner.JobConfig(0, 3, s"$dir/warehouse"),
+      refs :+ RecordingRef(42, badPath, badPath)))
+    val dataTests = sites.count(_.contains("Validation$.requireAll"))
+    // Each battery is one grouped aggregate; each mart and the epochs load
+    // are counted by their writes, with no re-read.
+    assert((sites.size, dataTests) == ((JobBudget, DataTestJobs)),
+      sites.map(_.linesIterator.take(3).mkString(" | ")).mkString("\n"))
+    Seq("sleep_metrics", "sleep_summary", "sleep_features").foreach { m =>
+      assert(report.martRows(m) == spark.read.parquet(s"$dir/warehouse/$m").count(), m)
+    }
+    assert(report.epochsLoaded == new Warehouse(spark, s"$dir/warehouse").readEpochs().count())
   }
 
   test("lenient job config loads interrupted recordings instead of failing them") {
