@@ -122,16 +122,6 @@ object Ingest {
     */
   final case class ExtractRow(epoch: Option[SleepEpoch], error: Option[IngestError])
 
-  /** Distributed extraction over files on any Hadoop-visible filesystem
-    * (local, HDFS, S3A): one task per recording; whole-file reads are fine
-    * because one PSG night is tens of MB. Failure isolation is per subject:
-    * a recording that fails to parse produces an error row, not a job abort
-    * (reference V8, `pipeline.py:209-260`).
-    *
-    * Returns the combined row stream in ONE pass; split with [[epochsOf]] /
-    * [[errorsOf]]. Callers that consume both sides should either persist the
-    * result or write it once and read back — never trigger two extractions.
-    */
   /** P3 drop-rate observability (processing.py:168-181 logs dropped MOVE/NAN
     * epochs): accumulators surface the counts on the driver without an extra
     * pass. Populated once the extraction dataset is acted on.
@@ -167,7 +157,21 @@ object Ingest {
     */
   val SalvageWarningType = "SALVAGE_WARNING"
 
-  /** `lenient = true` opts the whole pipeline into the reference
+  /** Distributed extraction over files on any Hadoop-visible filesystem
+    * (local, HDFS, S3A): one task per recording; whole-file reads are fine
+    * because one PSG night is tens of MB. Failure isolation is per subject:
+    * a recording that fails to parse produces an error row, not a job abort
+    * (reference V8, `pipeline.py:209-260`). The task also applies the V1 row
+    * contract to its subject ([[Validation.contractError]]), as the
+    * reference's worker does (`pipeline.py:81`): a rejected subject emits
+    * its SchemaErrors row in place of its epochs. The refs must name
+    * distinct subjects for that verdict to be per subject.
+    *
+    * Returns the combined row stream in ONE pass; split with [[epochsOf]] /
+    * [[errorsOf]]. Callers that consume both sides should either persist the
+    * result or write it once and read back — never trigger two extractions.
+    *
+    * `lenient = true` opts the whole pipeline into the reference
     * reader's salvage behavior (MNE truncates interrupted recordings to
     * the records present; the epoching tmax guard then clips events to
     * the salvaged signal): such subjects load their complete epochs
@@ -196,8 +200,8 @@ object Ingest {
     val salvagedAcc = m.salvagedRecords
     val talsAcc = m.skippedTals
 
-    spark.createDataset(refs)
-      .repartition(refs.size)
+    // One recording per task, with no shuffle.
+    spark.createDataset(spark.sparkContext.parallelize(refs, refs.size))
       .mapPartitions { iter =>
         iter.flatMap { ref =>
           try {
@@ -210,15 +214,17 @@ object Ingest {
             val tals = psg.skippedTals.toLong + hypno.skippedTals
             salvagedAcc.add(salvaged)
             talsAcc.add(tals)
-            val epochRows = res.rows.map(r => ExtractRow(Some(r), None))
+            val epochRows = Validation.contractError(ref.subjectId, res.rows) match {
+              case None => res.rows.map(r => ExtractRow(Some(r), None))
+              case rejected => Vector(ExtractRow(None, rejected))
+            }
             if (salvaged + tals > 0)
-              // Queryable salvage: the subject loaded, but record which
-              // inputs were shortened through the V8 channel.
+              // Queryable salvage: record which inputs were shortened
+              // through the V8 channel.
               epochRows :+ ExtractRow(None, Some(IngestError(ref.subjectId,
                 SalvageWarningType,
-                // "extracted", not "loaded": this row is emitted BEFORE
-                // per-subject contract validation, which may still drop
-                // the subject's epochs (the SchemaErrors row says so).
+                // "extracted", not "loaded": the contract may still have
+                // rejected the subject (its SchemaErrors row says so).
                 s"lenient salvage: $salvaged truncated record(s) dropped, " +
                   s"$tals malformed TAL(s) skipped; epochs extracted",
                 "")))

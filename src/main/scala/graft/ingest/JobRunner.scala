@@ -10,9 +10,10 @@ import graft.warehouse.Warehouse
   * (`pipeline.py:178-267`, SURVEY §3.1) as one Spark application.
   *
   * Config validation → extraction (one task per recording, per-subject
-  * failure isolation) → per-subject contract validation (whole-subject
-  * reject) → partitioned warehouse load (dynamic overwrite) → model DAG with
-  * interleaved data tests (V7 fail-fast) → marts materialized.
+  * failure isolation; each task applies the V1 row contract to its own
+  * subject and rejects it whole) → partitioned warehouse load (dynamic
+  * overwrite) → model DAG with interleaved data tests (V7 fail-fast) →
+  * marts materialized.
   *
   * The reference's thread/process boundaries collapse into Spark's
   * driver/executor split; its all-subjects-failed abort
@@ -48,6 +49,12 @@ object JobRunner {
   def run(spark: SparkSession, cfg: JobConfig, refs: Seq[RecordingRef]): JobReport = {
     import spark.implicits._
     validateConfig(cfg)
+    // epoch_idx restarts at 0 in every recording, so two recordings of one
+    // subject would collide in its warehouse partition.
+    val repeated = refs.groupBy(_.subjectId).collect { case (s, rs) if rs.size > 1 => s }
+    require(repeated.isEmpty,
+      s"repeated subject ids in refs: ${repeated.toSeq.sorted.mkString(", ")}")
+    require(refs.nonEmpty, "no recordings to ingest")
     val wh = new Warehouse(spark, cfg.warehouseDir)
 
     // Extract once; persist the combined result so the epoch/error split
@@ -56,14 +63,11 @@ object JobRunner {
     val extracted =
       Ingest.extract(spark, refs, Some(metrics), cfg.lenient).persist()
     try {
-      val (validEpochs, contractErrors) =
-        Validation.validateBySubject(Ingest.epochsOf(extracted))
-      // At most about two error rows per recording: collected once.
-      val errors = Ingest.errorsOf(extracted).unionByName(contractErrors)
-        .as[IngestError].collect()
+      // At most two error rows per recording: collected once.
+      val errors = Ingest.errorsOf(extracted).as[IngestError].collect()
       // SALVAGE_WARNING rows are observability, not failures: the subject's
-      // epochs were extracted (contract validation may still drop them, as
-      // its own row). Log every row, but count only real failures.
+      // epochs were extracted (the contract may still have rejected them,
+      // as its own row). Log every row, but count only real failures.
       val nFailed = errors.filter(_.error_type != Ingest.SalvageWarningType)
         .map(_.subject_id).distinct.length.toLong
       if (errors.nonEmpty) wh.logErrors(errors.toSeq.toDF())
@@ -73,7 +77,7 @@ object JobRunner {
         throw new IllegalStateException(
           s"all $nFailed subjects failed extraction; aborting transform")
 
-      val epochsLoaded = written(validEpochs)(wh.loadEpochs(_, overwrite = true))
+      val epochsLoaded = written(Ingest.epochsOf(extracted))(wh.loadEpochs(_, overwrite = true))
       if (metrics.dropped.value > 0)
         // processing.py:173-180's per-subject drop log, summarized.
         graft.Log.info(f"[ingest] dropped ${metrics.dropped.value}/" +

@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions._
   * dbt schema tests (V2–V6, `models/schema.yml:4-79`), and fail-fast gating
   * (V7, `pipeline.py:169-173`).
   *
+  * The row contract is a pure check that each extraction task applies to
+  * its own subject, as the reference's worker does: no Spark job.
+  *
   * Each model's dbt tests form one [[Validation.Tests]] battery, and
   * `requireAll` evaluates the whole battery as one aggregate and throws on
   * its first failing test: that is how the job runner tests each model
@@ -17,39 +20,18 @@ import org.apache.spark.sql.functions._
 object Validation {
 
   val ValidStages: Seq[String] = Seq("W", "N1", "N2", "N3", "REM")
-  val PowerCols: Seq[String] =
-    Seq("delta_power", "theta_power", "alpha_power", "sigma_power", "beta_power")
 
-  /** V1 — the Pandera contract on raw epoch rows: non-null ids, stage in the
-    * canonical five, power values non-null and non-NaN (negative dB is
-    * allowed; NaN means a failed calculation and rejects the subject —
-    * `tests/test_ingest.py:41-61`). Returns the violating rows.
+  /** V1 — the Pandera contract on one subject's raw epoch rows: stage in the
+    * canonical five, no NaN power (negative dB is allowed; NaN means a failed
+    * calculation — `tests/test_ingest.py:41-61`). Any violating row rejects
+    * the whole subject (`pipeline.py:81`, SchemaErrors path), as this error
+    * row with the subject's count of violating rows.
     */
-  def epochContractViolations(df: DataFrame): DataFrame = {
-    val badPower = PowerCols
-      .map(c => col(c).isNull || isnan(col(c)))
-      .reduce(_ || _)
-    df.filter(
-      col("subject_id").isNull || col("epoch_idx").isNull ||
-        col("stage").isNull || !col("stage").isin(ValidStages: _*) || badPower)
-  }
-
-  /** V1 applied per subject: the whole subject is rejected if ANY of its rows
-    * violates the contract (`pipeline.py:81`, SchemaErrors path). Returns
-    * (validEpochs, rejectedSubjectErrors).
-    */
-  def validateBySubject(df: DataFrame): (DataFrame, DataFrame) = {
-    val badSubjects = epochContractViolations(df)
-      .groupBy("subject_id")
-      .agg(count(lit(1)).as("n_violations"))
-    val valid = df.join(broadcast(badSubjects), Seq("subject_id"), "left_anti")
-    val errors = badSubjects.select(
-      col("subject_id").cast("int").as("subject_id"),
-      lit("SchemaErrors").as("error_type"),
-      concat(lit("epoch contract violations: "), col("n_violations"))
-        .as("error_message"),
-      lit("").as("stack_trace"))
-    (valid, errors)
+  def contractError(subjectId: Int, rows: Seq[SleepEpoch]): Option[IngestError] = {
+    val n = rows.count(r => !ValidStages.contains(r.stage) || r.delta_power.isNaN ||
+      r.theta_power.isNaN || r.alpha_power.isNaN || r.sigma_power.isNaN || r.beta_power.isNaN)
+    if (n == 0) None
+    else Some(IngestError(subjectId, "SchemaErrors", s"epoch contract violations: $n", ""))
   }
 
   // ---- dbt schema tests (V2–V6) as one battery per model ----

@@ -17,26 +17,25 @@ class ValidationSpec extends SparkSpec {
     SleepEpoch(subject, idx, stage, delta, 14.2, 8.0, 1.2, 2.5)
 
   test("valid rows pass the contract") {
-    val df = Seq(epoch(1, 100)).toDF()
-    assert(Validation.epochContractViolations(df).count() == 0)
+    assert(Validation.contractError(1, Seq(epoch(1, 100))).isEmpty)
   }
 
   test("NaN power rejects the whole subject, healthy subjects survive") {
-    val df = Seq(
+    val rows = Seq(
       epoch(1, 0), epoch(1, 1, delta = Double.NaN),
-      epoch(2, 0), epoch(2, 1)).toDF()
-    val (valid, errors) = Validation.validateBySubject(df)
-    assert(valid.select("subject_id").distinct().as[Int].collect().toSet == Set(2))
-    val err = errors.collect()
-    assert(err.length == 1 && err(0).getAs[Int]("subject_id") == 1)
-    assert(err(0).getAs[String]("error_type") == "SchemaErrors")
+      epoch(2, 0), epoch(2, 1))
+    val verdicts = rows.groupBy(_.subject_id).map { case (s, rs) =>
+      s -> Validation.contractError(s, rs) }
+    assert(verdicts.collect { case (s, None) => s }.toSet == Set(2))
+    val err = verdicts.values.flatten.toSeq
+    assert(err.length == 1 && err(0).subject_id == 1)
+    assert(err(0).error_type == "SchemaErrors")
   }
 
   test("invalid stage label is a violation; negative dB is not") {
-    val bad = Seq(epoch(1, 0, stage = "SLEEPING")).toDF()
-    assert(Validation.epochContractViolations(bad).count() == 1)
-    val negative = Seq(epoch(1, 0, delta = -5.5)).toDF()
-    assert(Validation.epochContractViolations(negative).count() == 0)
+    val bad = Validation.contractError(1, Seq(epoch(1, 0, stage = "SLEEPING")))
+    assert(bad.map(_.error_message).contains("epoch contract violations: 1"))
+    assert(Validation.contractError(1, Seq(epoch(1, 0, delta = -5.5))).isEmpty)
   }
 
   test("requireAll throws on the first failing check (fail-fast V7)") {
@@ -197,9 +196,12 @@ class WarehouseSpec extends SparkSpec {
 
 class JobRunnerSpec extends SparkSpec {
   /** Jobs of one batch over 2 healthy recordings and 1 corrupt one, and
-    * how many of them run data tests.
+    * how many of them run data tests. Each extraction task applies the row
+    * contract to its subject, so the error collect and the epochs load each
+    * run one job over the persisted extraction, with no per-subject
+    * aggregate or anti-join of their own.
     */
-  private val JobBudget = 19
+  private val JobBudget = 14
   private val DataTestJobs = 4
 
   test("full pipeline: extract, validate, load, transform, marts + errors") {
@@ -276,6 +278,44 @@ class JobRunnerSpec extends SparkSpec {
     assert(salvageRows(0).getAs[Int]("subject_id") == refs(1).subjectId)
     assert(salvageRows(0).getAs[String]("error_type") ==
       Ingest.SalvageWarningType)
+  }
+
+  test("the row contract rejects a subject whose file scales every band to NaN") {
+    val dir = tmpDir("job-contract")
+    val refs = SyntheticSource.writeRecordings(s"$dir/raw", 2)
+    // Give subject 0's first signal a 0/0 scale: the per-signal header is
+    // field-major, 8 bytes per signal for each of physical min, physical
+    // max, digital min and digital max; copy each min over its max.
+    val psg0 = java.nio.file.Paths.get(refs(0).psgPath)
+    val bytes = java.nio.file.Files.readAllBytes(psg0)
+    val ns = new String(bytes, 252, 4, "US-ASCII").trim.toInt
+    Seq(104, 120).foreach { min =>
+      System.arraycopy(bytes, 256 + min * ns, bytes, 256 + (min + 8) * ns, 8)
+    }
+    java.nio.file.Files.write(psg0, bytes)
+
+    val report = JobRunner.run(spark,
+      JobRunner.JobConfig(0, 2, s"$dir/warehouse"), refs)
+    assert(report.subjectsFailed == 1)
+    val wh = new Warehouse(spark, s"$dir/warehouse")
+    val errs = wh.readErrors().collect().map(r => (r.getAs[Int]("subject_id"),
+      r.getAs[String]("error_type"), r.getAs[String]("error_message")))
+    assert(errs.toSeq == Seq((0, "SchemaErrors", "epoch contract violations: 1174")))
+    assert(wh.readEpochs().filter("subject_id = 0").count() == 0)
+    val summary = spark.read.parquet(s"$dir/warehouse/sleep_summary")
+    assert(summary.select("subject_id").collect().map(_.getInt(0)).toSeq == Seq(1))
+  }
+
+  test("repeated or missing subject ids fail before anything is written") {
+    val dir = tmpDir("job-repeated")
+    val Seq(a, b) = SyntheticSource.writeRecordings(s"$dir/raw", 2)
+    val cfg = JobRunner.JobConfig(0, 2, s"$dir/warehouse")
+    val e = intercept[IllegalArgumentException] {
+      JobRunner.run(spark, cfg, Seq(a, b.copy(subjectId = 0)))
+    }
+    assert(e.getMessage.contains("repeated subject ids in refs: 0"), e.getMessage)
+    intercept[IllegalArgumentException](JobRunner.run(spark, cfg, Nil))
+    assert(!new java.io.File(s"$dir/warehouse").exists())
   }
 
   test("config validation rejects bad subject ranges") {
