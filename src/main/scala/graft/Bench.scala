@@ -64,24 +64,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val builder = Sessions.localBuilder(Sessions.cpus)
-    // Extra session confs for local experiments: SPARK_GRAFT_CONF="k=v;k=v".
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up outside the timed region: JVM/codegen/parquet-reader init is
-    // engine startup, not query cost.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
-    // Local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 limits the set; unset
-    // (the driver's mode) runs everything.
-    // Empty segments (or an entirely empty value) mean "no filter",
-    // matching the documented "unset runs everything" contract.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").filter(_.nonEmpty).toSet).filter(_.nonEmpty)
     // Named subset for cross-engine pairings (`runMain graft.Bench fullcomp`
     // or SPARK_GRAFT_SUBSET=fullcomp): the full-computation cut — t*/q*/
     // dash_*/e1–e4 — excludes the ~30 staged-intermediate oracles (which
@@ -89,7 +71,7 @@ object Bench {
     // streaming queries (micro-batch floors with no DuckDB equivalent), so
     // a Spark-vs-DuckDB total compares like for like. The matching DuckDB
     // side is `tools/duckdb_replay.py <sf> <outdir> 32 fullcomp`; recipe in
-    // PERF.md.
+    // CHANGES.md's round history.
     val subset: Option[String => Boolean] =
       args.headOption.filter(_.nonEmpty)
         .orElse(sys.env.get("SPARK_GRAFT_SUBSET")) match {
@@ -105,21 +87,19 @@ object Bench {
           sys.exit(2)
         case None => None
       }
-    // Fail fast on a typo'd or out-of-subset SPARK_GRAFT_ONLY (same
-    // discipline as the named subsets above and graft.Verify): names the
-    // run would actually bench are keySet ∩ subset, and a filter naming
-    // anything outside that set must abort loudly — never silently bench
-    // an empty (or unexpectedly thinner) set.
-    only.foreach { names =>
-      val benchable = SparkEntry.queries.keySet
-        .filter(n => subset.forall(_(n)))
-      val unknown = names -- benchable
-      if (unknown.nonEmpty) {
-        System.err.println("[bench] SPARK_GRAFT_ONLY queries unknown or " +
-          s"outside the active subset: ${unknown.toSeq.sorted.mkString(", ")}")
-        sys.exit(2)
-      }
-    }
+    // Local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 limits the set; unset
+    // (the driver's mode) runs everything. The names the run would bench are
+    // keySet ∩ subset: a filter naming anything outside it aborts loudly
+    // (the named subsets' and graft.Verify's discipline), never silently
+    // benching an empty or unexpectedly thinner set.
+    val only = Sessions.nameFilter("SPARK_GRAFT_ONLY",
+      SparkEntry.queries.keySet.filter(n => subset.forall(_(n))))(u =>
+      s"[bench] SPARK_GRAFT_ONLY queries unknown or outside the active subset: $u")
+    val spark = Sessions.cli("WARN")
+    // Warm-up outside the timed region: JVM/codegen/parquet-reader init is
+    // engine startup, not query cost.
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    spark.read.parquet(s"$sfDir/nation.parquet").count()
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(3)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_latest.json")
     def entry(k: String, v: Any): String = "\"" + k + "\":" + v
@@ -135,36 +115,24 @@ object Bench {
       val jobs = rs.map(_._2.jobs).filter(_ >= 0).sum
       val fileJson =
         s"""{"metric":"total","value":${total(rs)},"unit":"sec","queries":{${queriesJson(rs)}},"sf":"$sfDir","passes":$passes,"stat":"median","partial":$partial,"jobs":$jobs,"cpus":${Sessions.cpus},"detail":$detail}"""
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get(out),
-          (fileJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] could not write $out: ${e.getMessage}")
-      }
+      scala.util.Try(java.nio.file.Files.write(java.nio.file.Paths.get(out),
+        (fileJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        .failed.foreach(e =>
+          System.err.println(s"[bench] could not write $out: ${e.getMessage}"))
     }
     val counter = new JobCounter(spark)
-    // Every pass, the warm one included, starts from a clean slate: no
-    // cached blocks left behind by earlier queries/passes (their persist()
-    // calls would otherwise squat on storage memory, re-cache plans already
-    // cached, and make pass 2 measure cache hits, not the engine) and no
-    // carried garbage — the GC runs OUTSIDE the timed region so pass k
-    // doesn't pay for pass k-1's allocations.
-    def cleanSlate(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-    }
     val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Result)]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) && subset.forall(_(n)) }
       .map { case (name, fn) =>
         // One untimed warm pass per query (codegen compilation + JIT are
         // engine warm-up, not query cost); its jobs are drained uncounted.
-        cleanSlate()
+        // Every pass, the warm one included, starts from a clean slate.
+        Sessions.cleanSlate(spark)
         try { fn(spark, sfDir).count() } catch { case _: Throwable => }
         counter.drain()
         val timed = (1 to passes).map { _ =>
-          cleanSlate()
+          Sessions.cleanSlate(spark)
           // A failing pass reports -1, loudly — never its time-to-exception
           // masquerading as a legitimate duration.
           val t0 = System.nanoTime()
@@ -177,13 +145,9 @@ object Bench {
           val secs = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
           (secs, counter.drain()) // the drain's sentinel runs after the clock
         }
-        val times = timed.map(_._1)
-        val r =
-          if (times.contains(-1.0)) name -> Result(-1.0, -1.0, -1.0, -1)
-          else {
-            val s = times.sorted
-            name -> Result(s(s.length / 2), s.head, s.last, timed.last._2)
-          }
+        val s = timed.map(_._1).sorted
+        val r = name -> (if (s.contains(-1.0)) Result(-1.0, -1.0, -1.0, -1)
+          else Result(s(s.length / 2), s.head, s.last, timed.last._2))
         // Checkpoint the artifact after EVERY query (marked partial): a
         // median-of-3 full-registry run takes ~10 min, and a run killed by
         // an external timeout should leave the completed per-query numbers
@@ -192,12 +156,11 @@ object Bench {
         writeArtifact(acc.toSeq, partial = true)
         r
       }
-    val json =
-      s"""{"metric":"total","value":${total(results)},"unit":"sec","queries":{${queriesJson(results)}},"sf":"$sfDir","passes":$passes,"stat":"median"}"""
     // The compact line goes out FIRST (and is this program's primary stdout
     // output): the driver scrapes sbt's stdout and has truncated long tails
     // before — leading with the payload gives the scrape its best chance.
-    println(json)
+    println(
+      s"""{"metric":"total","value":${total(results)},"unit":"sec","queries":{${queriesJson(results)}},"sf":"$sfDir","passes":$passes,"stat":"median"}""")
     // BENCH_r06 showed the driver keeps only a 2000-byte stdout TAIL and
     // parses from that — the full per-query line is 3.3+ KB (re-measured
     // r15: 3392 bytes for 133 queries), so it can never land intact

@@ -1,11 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-quality audit: prints physical-plan fingerprints per registry query
   * (shuffle count, broadcast joins, pushed filters, codegen coverage) so
   * regressions in plan shape are visible. Run:
-  * `sbt "runMain graft.PlanAudit [sfDir] [queryName...]"`.
+  * `sbt "runMain graft.PlanAudit [--dump <outDir> <suffix>] [sfDir] [queryName...]"`.
+  *
+  * `--dump` also writes each query's `.explain("formatted")` plan to
+  * `<outDir>/<query>_<suffix>.txt` — the before/after plan evidence for
+  * optimization rounds (`plans/rNN/<query>_{before,after}.txt`). Queries
+  * that run eager work at build time (staging writes, training collects)
+  * execute it here too, so the plan is the FINAL action's, which is what
+  * graft.Bench times last. `GRAFT_PLAN_EXEC=1` executes each plan first
+  * (see [[executedFingerprint]]) so both outputs show the FINAL adaptive
+  * plan: AQE's runtime decisions (ReusedExchange, coalesced AQEShuffleRead,
+  * SMJ→SHJ/BHJ rewrites, codegen span ids) are invisible before execution.
   */
 object PlanAudit {
 
@@ -17,7 +31,7 @@ object PlanAudit {
   final case class Fingerprint(exchanges: Int, bhj: Int, smj: Int, bnlj: Int,
       cartesian: Int, pushedFilters: Int, codegenSpans: Int)
 
-  def fingerprint(df: org.apache.spark.sql.DataFrame): Fingerprint = {
+  def fingerprint(df: DataFrame): Fingerprint = {
     val s = df.queryExecution.executedPlan.toString()
     Fingerprint(
       exchanges = "Exchange (hashpartitioning|rangepartitioning|SinglePartition)".r
@@ -40,7 +54,7 @@ object PlanAudit {
     * window and any scan; a corpus-global `row_number() over (order by …)`
     * does not, and is exactly the round-3 t32/e8 scale finding.
     */
-  def unpartitionedCorpusWindows(df: org.apache.spark.sql.DataFrame): Int = {
+  def unpartitionedCorpusWindows(df: DataFrame): Int = {
     import org.apache.spark.sql.execution._
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -78,52 +92,48 @@ object PlanAudit {
     * the cheap no-execution default (its exchange/join/pushdown counts
     * come from the initial physical plan, which is what PlanSpec pins).
     */
-  def executedFingerprint(df: org.apache.spark.sql.DataFrame): Fingerprint = {
-    val plan = df.queryExecution.executedPlan
-    plan.execute().count() // forces AQE to final-plan; result discarded
+  def executedFingerprint(df: DataFrame): Fingerprint = {
+    // Forces AQE to final-plan; the rows are discarded.
+    df.queryExecution.executedPlan.execute().count()
     fingerprint(df)
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = Sessions.localBuilder("4").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val (dump, rest) = args.toList match {
+      case "--dump" :: outDir :: suffix :: tail => (Some((outDir, suffix)), tail)
+      case other => (None, other)
+    }
+    val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
+    val names = rest.drop(1).toSet
+    val execFirst = sys.env.contains("GRAFT_PLAN_EXEC")
+    val spark = Sessions.cli("ERROR")
+    // Iterative operators are invisible to per-query fingerprints, so audit
+    // one REPRESENTATIVE round each: inside the loop both inputs are eager
+    // localCheckpoints, so the round plan (checkpoint-scan inputs) IS the
+    // entire recurring plan, and its shape is constant in the round number
+    // by construction.
+    val rounds: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+      "d3_round" -> ((s, _) => componentsRound(s)),
+      "q33_round" -> ((s, _) => pagerankRound(s)))
+    (SparkEntry.queries.toSeq.sortBy(_._1) ++ rounds)
       .filter { case (n, _) => names.isEmpty || names(n) }
       .foreach { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
-          // GRAFT_PLAN_EXEC=1: execute before fingerprinting so the
-          // codegenSpans column reads the FINAL adaptive plan (real
-          // whole-stage-codegen coverage) instead of the pre-AQE zero.
-          val f =
-            if (sys.env.contains("GRAFT_PLAN_EXEC")) executedFingerprint(df)
-            else fingerprint(df)
+          val f = if (execFirst) executedFingerprint(df) else fingerprint(df)
           println(f"$name%-28s exch=${f.exchanges} bhj=${f.bhj} smj=${f.smj} " +
             f"bnlj=${f.bnlj} pushedFilters=${f.pushedFilters} codegenSpans=${f.codegenSpans}")
+          dump.foreach { case (outDir, suffix) =>
+            val path = Files.createDirectories(Paths.get(outDir))
+              .resolve(s"${name}_$suffix.txt")
+            Files.write(path, df.queryExecution.explainString(FormattedMode)
+              .getBytes(StandardCharsets.UTF_8))
+            println(s"[planaudit] wrote $path")
+          }
         } catch {
           case e: Exception => println(s"$name FAILED: ${e.getMessage}")
         }
       }
-    // Iterative operators are invisible to per-query fingerprints, so audit
-    // one REPRESENTATIVE round: inside the loop both inputs are eager
-    // localCheckpoints, so the round plan below (checkpoint-scan inputs) IS
-    // the entire recurring plan, and its shape is constant in the round
-    // number by construction.
-    if (names.isEmpty || names("d3_round")) {
-      val f = fingerprint(componentsRound(spark))
-      println(f"d3_round                     exch=${f.exchanges} bhj=${f.bhj} " +
-        f"smj=${f.smj} bnlj=${f.bnlj} pushedFilters=${f.pushedFilters} " +
-        f"codegenSpans=${f.codegenSpans}")
-    }
-    if (names.isEmpty || names("q33_round")) {
-      val f = fingerprint(pagerankRound(spark))
-      println(f"q33_round                    exch=${f.exchanges} bhj=${f.bhj} " +
-        f"smj=${f.smj} bnlj=${f.bnlj} pushedFilters=${f.pushedFilters} " +
-        f"codegenSpans=${f.codegenSpans}")
-    }
     spark.stop()
   }
 
@@ -133,9 +143,8 @@ object PlanAudit {
     * edges subtree once per iteration reference; THIS is what each round
     * actually executes).
     */
-  def pagerankRound(spark: SparkSession): org.apache.spark.sql.DataFrame = {
+  def pagerankRound(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val withDeg = Seq((1L, 2L, 2.0), (2L, 1L, 1.0), (1L, 3L, 2.0),
         (3L, 1L, 1.0)).toDF("u", "v", "d")
       .localCheckpoint(true)
@@ -147,7 +156,7 @@ object PlanAudit {
   /** One connected-components propagation round over checkpoint-backed
     * inputs — the recurring unit of the d3 clustering loop.
     */
-  def componentsRound(spark: SparkSession): org.apache.spark.sql.DataFrame = {
+  def componentsRound(spark: SparkSession): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("src", "dst")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,22 +7,10 @@ object Verify {
     val Array(sfDir, outDir) = args
     // Local-iteration filter (same contract as Bench): SPARK_GRAFT_ONLY=a,b
     // dumps just those queries; unset (the driver's mode) dumps everything.
-    // Fail fast on a typo'd name BEFORE paying SparkSession startup: a
-    // misspelled filter must abort loudly, never silently verify nothing.
-    // Empty segments (or an entirely empty value) mean "no filter",
-    // matching the documented "unset dumps everything" contract.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").filter(_.nonEmpty).toSet).filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(s"[verify] unknown SPARK_GRAFT_ONLY queries: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-        sys.exit(2)
-      }
-    }
-    val spark = Sessions.localBuilder(Sessions.cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Checked BEFORE paying SparkSession startup.
+    val only = Sessions.nameFilter("SPARK_GRAFT_ONLY",
+      SparkEntry.queries.keySet)(u => s"[verify] unknown SPARK_GRAFT_ONLY queries: $u")
+    val spark = Sessions.cli("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -54,6 +54,12 @@ object JobRunner {
     val repeated = refs.groupBy(_.subjectId).collect { case (s, rs) if rs.size > 1 => s }
     require(repeated.isEmpty,
       s"repeated subject ids in refs: ${repeated.toSeq.sorted.mkString(", ")}")
+    // Only subjects in [startingSubject, endingSubject) are processed
+    // (pipeline.py:185-189).
+    val outside = refs.map(_.subjectId)
+      .filterNot(s => s >= cfg.startingSubject && s < cfg.endingSubject)
+    require(outside.isEmpty, s"subject ids outside [${cfg.startingSubject}, " +
+      s"${cfg.endingSubject}): ${outside.sorted.mkString(", ")}")
     require(refs.nonEmpty, "no recordings to ingest")
     val wh = new Warehouse(spark, cfg.warehouseDir)
 

@@ -213,7 +213,7 @@ class JobRunnerSpec extends SparkSpec {
     val all = refs :+ RecordingRef(42, badPath, badPath)
 
     val report = JobRunner.run(spark,
-      JobRunner.JobConfig(0, 3, s"$dir/warehouse"),
+      JobRunner.JobConfig(0, 43, s"$dir/warehouse"),
       all)
 
     assert(report.subjectsFailed == 1)
@@ -236,7 +236,7 @@ class JobRunnerSpec extends SparkSpec {
     val badPath = s"$dir/raw/corrupt.edf"
     java.nio.file.Files.write(java.nio.file.Paths.get(badPath), "garbage".getBytes)
     val (report, sites) = withJobSites(JobRunner.run(spark,
-      JobRunner.JobConfig(0, 3, s"$dir/warehouse"),
+      JobRunner.JobConfig(0, 43, s"$dir/warehouse"),
       refs :+ RecordingRef(42, badPath, badPath)))
     val dataTests = sites.count(_.contains("Validation$.requireAll"))
     // Each battery is one grouped aggregate; each mart and the epochs load
@@ -315,6 +315,10 @@ class JobRunnerSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("repeated subject ids in refs: 0"), e.getMessage)
     intercept[IllegalArgumentException](JobRunner.run(spark, cfg, Nil))
+    val out = intercept[IllegalArgumentException] {
+      JobRunner.run(spark, cfg, Seq(a, b.copy(subjectId = 2)))
+    }
+    assert(out.getMessage.contains("subject ids outside [0, 2): 2"), out.getMessage)
     assert(!new java.io.File(s"$dir/warehouse").exists())
   }
 
