@@ -18,10 +18,11 @@ import org.apache.spark.sql.SparkSession
   * Per-query min/max and the Spark job count of the last timed pass land in
   * the `bench_latest.json` file artifact, with the summed job count and the
   * cpus the run planned at: job counts are host-independent, so they are
-  * the number to compare across runs. The one exception is
-  * t40_countmin_heavy_hitters: it runs 6 or 8 jobs from run to run, as
-  * adaptive execution does or does not reuse its vocab shuffle, so a ±2
-  * difference in the summed jobs is not a regression.
+  * the number to compare across runs. There are two exceptions:
+  * t40_countmin_heavy_hitters runs 6 or 8 jobs from run to run, as
+  * adaptive execution does or does not reuse its vocab shuffle, and
+  * q33_pagerank runs 19 or 20. So a ±3 difference in the summed jobs is
+  * not a regression.
   */
 object Bench {
   private def round3(v: Double): Double = math.rint(v * 1000) / 1000

@@ -405,68 +405,7 @@ object ScaleCheck {
             .groupBy(window(col("ts"), "1 hour"), col("event_type"))
             .agg(count(lit(1)).as("n_events")))
           .filter(col("event_type") =!= "_hb").count()
-      },
-      // Glob planning over a many-directory layout — the 100 TB shape is
-      // thousands of partition directories. dirs = 100·R, two files each;
-      // then 1% of the dirs get a crashed-export fence (manifest + staged
-      // brand-new file — the protocol state EdfDataSourceSpec drives
-      // through the real writer). Planning wall must stay flat PER
-      // DIRECTORY across decades: EdfPlanningRpcSpec pins the per-load RPC
-      // budget, this leg pins the wall-clock side. Layout creation is
-      // untimed; planning opens no data file.
-      Leg("glob_plan", Seq("glob_dirs" -> "%d", "glob_plan_steady_s" -> "%.3f",
-          "glob_plan_parts" -> "%d", "glob_plan_fenced_s" -> "%.3f",
-          "glob_fenced_parts" -> "%d", "multipath10_plan_s" -> "%.3f",
-          "multipath100_plan_s" -> "%.3f"), NoInput, None, in => {
-        import java.nio.file.{Files => JFiles, Paths => JPaths}
-        val nDirs = 100 * in.r
-        val base = JFiles.createTempDirectory("scale_glob").toString
-        try {
-          (0 until nDirs).foreach { i =>
-            val d = JPaths.get(s"$base/part$i")
-            JFiles.createDirectories(d)
-            JFiles.write(d.resolve("rec0.edf"), Array[Byte](0))
-            JFiles.write(d.resolve("rec1.edf"), Array[Byte](0))
-          }
-          def planParts(): Long = spark.read.format("edf")
-            .load(s"$base/*/*.edf").rdd.getNumPartitions.toLong
-          val (tS, nS) = time(planParts())
-          // Multi-path planning wall: load(dir_0, …, dir_{M-1}) over
-          // the same layout at M ∈ {10, 100} — a union of M per-spec
-          // plans (one listing + one isDirectory HEAD each, per the
-          // EdfPlanningRpcSpec member-sum pin) must stay LINEAR in M
-          // with the same per-directory constant as the glob, not
-          // quadratic in the union/dedup step.
-          def planMulti(m: Int): Long = spark.read.format("edf")
-            .load((0 until m).map(i => s"$base/part$i"): _*)
-            .rdd.getNumPartitions.toLong
-          val (tM10, nM10) = time(planMulti(10))
-          val (tM100, nM100) = time(planMulti(100))
-          require(nM10 == 20L && nM100 == 200L,
-            s"multi-path planned $nM10/$nM100 partitions (want 20/200)")
-          (0 until nDirs by 100).foreach { i =>
-            val stage = JPaths.get(s"$base/part$i/_temporary/q/task-0-0")
-            JFiles.createDirectories(stage)
-            JFiles.write(stage.resolve("new.edf"), Array[Byte](0))
-            JFiles.write(JPaths.get(s"$base/part$i/" +
-              graft.sources.EdfBatchWrite.fenceName(
-                graft.sources.EdfBatchWrite.ManifestPrefix, 1, "q")),
-              s"${stage.resolve("new.edf")}\tnew.edf\n"
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-          val (tF, nF) = time(planParts())
-          require(nS == 2L * nDirs && nF == nS + nDirs / 100,
-            s"glob_plan planned $nS/$nF partitions over $nDirs dirs")
-          Seq[Any](nDirs, tS, nS, tF, nF, tM10, tM100)
-        } finally {
-          // A failed require must not leak the 100·R-directory layout.
-          val walk = JFiles.walk(JPaths.get(base))
-          try walk.sorted(
-            java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(p => JFiles.deleteIfExists(p))
-          finally walk.close()
-        }
-      }))
+      })
   }
 
   def main(args: Array[String]): Unit = {

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, GlobExpander, GlobFilter, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -23,7 +23,7 @@ import org.apache.spark.util.SerializableConfiguration
 import graft.edf.Edf
 
 /** DataSource V2 reader for EDF/EDF+ files: `spark.read.format("edf")
-  * .option("chunk_records", n).load(pathOrGlob)` — the polished form of the
+  * .option("chunk_records", n).load(dirOrFile)` — the polished form of the
   * S1 custom source (SURVEY §4.3; the `binaryFile` + `mapPartitions` path in
   * [[graft.ingest.Ingest]] remains the pipeline's workhorse).
   *
@@ -61,45 +61,6 @@ object EdfDataSource {
     StructField("t0_sec", DoubleType, nullable = false),
     StructField("samples", ArrayType(DoubleType, containsNull = false),
       nullable = true)))
-
-  /** A multi-path `load(a, b, …)` arrives as a JSON-encoded array in
-    * the `paths` option (Spark's DataFrameReader convention — the same
-    * encoding its file sources decode). A hand-set value that does not
-    * LOOK like an array (no leading '[') is one literal path — the
-    * pre-multi-path behavior. A value that starts with '[' but is not
-    * STRICTLY a whole JSON array of strings fails HERE, loudly, naming
-    * the option — matching Spark's own getPaths, which throws on
-    * malformed `paths` JSON rather than guessing. The strictness
-    * matters both ways: Jackson's lenient defaults would silently
-    * mangle `[12]rec0.edf` (a character-class glob plus trailing text)
-    * into the literal path "12", and a silent literal fallback would
-    * surface later as a baffling file-not-found on the raw JSON
-    * string. Character-class globs belong in the `path` option (or a
-    * `load(pattern)` argument), where no JSON decoding applies.
-    */
-  private[sources] def parsePaths(s: String): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    def bad(why: String): Nothing = throw new IllegalArgumentException(
-      s"edf: the 'paths' option must be a whole JSON array of strings " +
-        s"(the encoding DataFrameReader.load(a, b, …) produces) — " +
-        s"got '$s' ($why). For a character-class glob like [12]*.edf " +
-        "use the 'path' option or a load(pattern) argument instead.")
-    if (!s.dropWhile(_.isWhitespace).startsWith("[")) return Seq(s)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    mapper.enable(com.fasterxml.jackson.databind.DeserializationFeature
-      .FAIL_ON_TRAILING_TOKENS)
-    val node =
-      try mapper.readValue(s,
-        classOf[com.fasterxml.jackson.databind.JsonNode])
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          bad(s"JSON parse failed: ${e.getMessage}")
-      }
-    if (node != null && node.isArray &&
-        node.elements.asScala.forall(_.isTextual))
-      node.elements.asScala.map(_.asText).toSeq
-    else bad("parsed, but not an array of strings")
-  }
 }
 
 private class EdfTable(properties: Map[String, String])
@@ -113,17 +74,14 @@ private class EdfTable(properties: Map[String, String])
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new EdfScanBuilder(
       {
-        // UNION of `path` and `paths` (Spark's file-source getPaths
-        // convention) — never silently prefer one over the other; an
-        // empty result (e.g. a hand-set `paths` of "[]") stays the
-        // loud no-path error, not a silent empty scan.
-        val specs =
-          Option(options.get("path")).orElse(properties.get("path")).toSeq ++
-            Option(options.get("paths")).orElse(properties.get("paths"))
-              .map(EdfDataSource.parsePaths).getOrElse(Nil)
-        if (specs.isEmpty)
-          throw new IllegalArgumentException("edf: no path given")
-        specs.distinct
+        // A multi-path `load(a, b, …)` arrives in the `paths` option; this
+        // source reads one directory or one file per load, so it fails
+        // loudly rather than reading a subset.
+        if (Option(options.get("paths")).orElse(properties.get("paths")).isDefined)
+          throw new IllegalArgumentException(
+            "edf: one directory or file per load; got several paths")
+        Option(options.get("path")).orElse(properties.get("path"))
+          .getOrElse(throw new IllegalArgumentException("edf: no path given"))
       },
       Option(options.get("chunk_records")).orElse(properties.get("chunk_records"))
         .map(_.toInt).getOrElse(3600),
@@ -689,7 +647,7 @@ private class EdfDataWriter(targetDir: String, attemptDir: String,
   override def close(): Unit = ()
 }
 
-private class EdfScanBuilder(pathSpecs: Seq[String], chunkRecords: Int,
+private class EdfScanBuilder(pathSpec: String, chunkRecords: Int,
     lenient: Boolean = false)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
@@ -747,22 +705,16 @@ private class EdfScanBuilder(pathSpecs: Seq[String], chunkRecords: Int,
     override def toBatch: Batch = this
 
     override def description(): String =
-      s"edf ${pathSpecs.mkString(",")} " +
+      s"edf $pathSpec " +
         s"ReadSchema: ${required.catalogString} " +
         s"PushedFilters: [${pushed.mkString(", ")}]"
 
     override def planInputPartitions(): Array[InputPartition] = {
       val conf = org.apache.spark.sql.SparkSession.active.sparkContext
         .hadoopConfiguration
-      // Union of the per-spec plans, dedup'd by logical path — the ONE
-      // dedup point: a file reachable through two specs
-      // (`load(dir, s"$dir/rec0.edf")`) or through two brace alternatives
-      // of one spec (`{day,day/rec0.edf}`) is read once. The loud
-      // no-match partition stays per spec, so ONE typo'd path in a
-      // multi-path load fails the read rather than silently thinning it,
-      // and it is exempt from path pushdown: pruning it would turn the
-      // guaranteed failure into a silent empty result.
-      pathSpecs.flatMap(EdfPlanner.plan(_, conf)).distinctBy(_.path)
+      // The loud no-match partition is exempt from path pushdown: pruning
+      // it would turn the guaranteed failure into a silent empty result.
+      EdfPlanner.plan(pathSpec, conf)
         .filter(part => part.noMatch || pathOk(part.path))
         .toArray[InputPartition]
     }
@@ -776,51 +728,41 @@ private class EdfScanBuilder(pathSpecs: Seq[String], chunkRecords: Int,
   }
 }
 
-/** The EDF scan's read planner. A load spec plans in two steps:
+/** The EDF scan's read planner. A load spec is a directory or one file,
+  * and plans in two steps:
   *
-  *  1. '''Find the targets''' — the directories the spec reaches, each
-  *     with the data files listed in it, the commit-protocol fence files
-  *     found for it, and a name gate. A directory load is one target
-  *     from its listing. A glob is one target per matched directory (a
-  *     directory load of it — one level, no recursion) plus one per
-  *     directory holding a matched file or a fence file, found through
-  *     the pattern's brace alternatives and two sibling fence probes.
-  *  2. '''Resolve each target''' with the per-name manifest rule
-  *     ([[resolve]]), the same rule [[EdfExportRecovery.rollForward]]
-  *     applies.
-  *
-  * Directory, glob and multi-path loads all reduce to these two steps;
-  * the scan unions the per-spec plans and dedups them by logical path.
+  *  1. '''Find the target''' — one listing of the directory (for a file,
+  *     of its parent) yields the data files, the commit-protocol fence
+  *     files and a name gate: `*.edf` for a directory, the file's own
+  *     name for a file.
+  *  2. '''Resolve it''' with the per-name manifest rule ([[resolve]]),
+  *     the same rule [[EdfExportRecovery.rollForward]] applies.
   */
 private[sources] object EdfPlanner {
   import EdfBatchWrite.{Fence, hiddenName}
 
-  /** One directory to resolve. `files` are the data files a listing or
-    * glob matched there (the listing's path strings); `nameOk` gates
-    * which names that fences mention but no listing shows this load
-    * serves.
+  /** One directory to resolve. `files` are the data files its listing
+    * showed (the listing's path strings); `nameOk` gates which names that
+    * fences mention but the listing does not show this load serves.
     */
   private final case class Target(dir: Path, files: Seq[String],
       fences: Seq[Fence], nameOk: String => Boolean)
 
-  /** One load spec's partitions. A glob that matched nothing and resolved
-    * no pending name plans one loud `noMatch` partition, whose read fails
-    * with the underlying file-not-found: a typo'd pattern never returns a
-    * silent empty result, and the outcome does not flip when lingering
-    * fences are cleaned up. A matched-but-empty directory is an empty
-    * scan, as a direct load of it is.
+  /** One load spec's partitions. A file that is neither listed nor
+    * pending behind a fence plans one loud `noMatch` partition, whose read
+    * fails with the underlying file-not-found: a typo'd path never
+    * returns a silent empty result. An empty directory is an empty scan.
     */
   def plan(spec: String, conf: Configuration): Seq[EdfInputPartition] = {
     val p = new Path(spec)
     val fs = p.getFileSystem(conf)
-    if (fs.isDirectory(p)) return resolve(fs, listTarget(fs, p))
-    // Raw globStatus applies no hidden-file filter: a broad pattern
-    // (`dir/*`) matches this source's own fence files and staging tree.
-    val matches = Option(fs.globStatus(p)).toSeq.flatten
-      .filterNot(s => hiddenName(s.getPath.getName))
-    val parts = globTargets(fs, spec, matches).flatMap(resolve(fs, _))
-    if (matches.isEmpty && parts.isEmpty)
-      Seq(EdfInputPartition(spec, noMatch = true))
+    if (fs.isDirectory(p)) return resolve(fs, listTarget(fs, p, dataName))
+    val parts = Option(p.getParent).toSeq.flatMap { dir =>
+      try resolve(fs, listTarget(fs, dir,
+        name => name == p.getName && !hiddenName(name)))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }
+    if (parts.isEmpty) Seq(EdfInputPartition(spec, noMatch = true))
     else parts
   }
 
@@ -833,86 +775,14 @@ private[sources] object EdfPlanner {
 
   private def baseName(f: String): String = f.substring(f.lastIndexOf('/') + 1)
 
-  /** Compiles a glob without I/O; `None` only for pattern-syntax errors. */
-  private def globFilter(s: String): Option[GlobFilter] =
-    try Some(new GlobFilter(s)) catch { case _: java.io.IOException => None }
-
-  /** A directory load: one listing yields both the data files and the
+  /** One listing yields both the data files `nameOk` admits and the
     * fences.
     */
-  private def listTarget(fs: FileSystem, dir: Path): Target = {
+  private def listTarget(fs: FileSystem, dir: Path,
+      nameOk: String => Boolean): Target = {
     val listed = fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
-    Target(dir, listed.map(_.toString).filter(f => dataName(baseName(f))),
-      EdfBatchWrite.fencesOf(listed), dataName)
-  }
-
-  /** A glob's targets. Fence files never match a data glob (`*.edf`), so
-    * each alternative probes for them with two sibling globs on its parent
-    * pattern — constant RPC cost however many directories it spans, and
-    * the probe runs even when the data glob matched nothing: an in-flight
-    * export whose files are all still staged is part of the committed
-    * state. The parent/name split is textual, and a slash inside braces
-    * (`{a,a/b.edf}`) breaks it, so braces are expanded first
-    * (GlobExpander, the globber's own first step); every alternative's
-    * remaining braces are slash-free. Pending names in a fenced directory
-    * are served iff they match the name component of an alternative
-    * whose parent pattern reached it, so `load("part-1*.edf")` cannot
-    * surface an in-flight export's unrelated files.
-    */
-  private def globTargets(fs: FileSystem, spec: String,
-      matches: Seq[FileStatus]): Seq[Target] = {
-    val (dirMatches, fileMatches) = matches.partition(_.isDirectory)
-    val filesByDir = fileMatches.map(_.getPath).groupBy(_.getParent)
-    val alternatives =
-      try GlobExpander.expand(spec).asScala.toSeq.map(new Path(_))
-      catch { case _: java.io.IOException => Seq(new Path(spec)) }
-    // Per alternative: its name gate and the parent patterns it probes.
-    // Any pattern globStatus accepted splits cleanly after expansion, so
-    // the degrades are belts only — and loud ones: an operator must know
-    // when pending-name discovery was skipped. Probing never degrades
-    // past the actual match parents, so LISTED matches keep full
-    // redirect resolution in every case.
-    val probes = alternatives.map { a =>
-      val gate = globFilter(a.getName)
-      if (gate.isEmpty)
-        graft.Log.warn(s"[edf-read] pattern '$spec': alternative '$a' " +
-          "has no valid name-component glob — pending-name discovery " +
-          "skipped for it; an in-flight export's not-yet-promoted files " +
-          "may be invisible to this pattern")
-      val parents = Option(a.getParent)
-        .filter(par => globFilter(par.toString).isDefined) match {
-        case Some(par) => Seq(par)
-        case None =>
-          graft.Log.warn(s"[edf-read] pattern '$spec': alternative '$a' " +
-            "has no valid parent glob — probing fences on the actual " +
-            "match parents instead; a fence-only directory is invisible " +
-            "to this alternative")
-          filesByDir.keys.toSeq.sortBy(_.toString)
-      }
-      (gate, parents.map(_.toString))
-    }
-    // Each distinct parent pattern is probed ONCE.
-    val fenceFiles: Map[String, Seq[Path]] =
-      probes.flatMap(_._2).distinct.map { par =>
-        par -> Seq(EdfBatchWrite.ManifestPrefix, EdfBatchWrite.CommittedPrefix)
-          .flatMap(pre => Option(fs.globStatus(new Path(par, pre + "*")))
-            .toSeq.flatten.filter(_.isFile).map(_.getPath))
-      }.toMap
-    val fences = EdfBatchWrite
-      .fencesOf(fenceFiles.values.flatten.toSeq.distinct)
-      .groupBy(_.path.getParent)
-    val gates: Map[Path, Seq[GlobFilter]] = probes
-      .flatMap { case (gate, parents) =>
-        for (g <- gate.toSeq; par <- parents; f <- fenceFiles(par))
-          yield f.getParent -> g
-      }.groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
-    dirMatches.map(_.getPath).sortBy(_.toString).map(listTarget(fs, _)) ++
-      (filesByDir.keySet ++ fences.keySet).toSeq.sortBy(_.toString).map { d =>
-        val g = gates.getOrElse(d, Nil)
-        Target(d, filesByDir.getOrElse(d, Nil).map(_.toString),
-          fences.getOrElse(d, Nil),
-          name => !hiddenName(name) && g.exists(_.accept(new Path(name))))
-      }
+    Target(dir, listed.map(_.toString).filter(f => nameOk(baseName(f))),
+      EdfBatchWrite.fencesOf(listed), nameOk)
   }
 
   /** Resolves one target through its fences. An in-flight (or crashed

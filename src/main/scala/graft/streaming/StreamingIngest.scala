@@ -169,19 +169,4 @@ object StreamingIngest {
         col("n_epochs"), col("n_invalid"),
         (col("n_invalid") / col("n_epochs")).as("invalid_ratio"))
   }
-
-  /** Micro-batch warehouse loading: the reference's per-subject serial load
-    * loop (X3) becomes `foreachBatch` appending each micro-batch through the
-    * same warehouse writer used in batch mode.
-    */
-  def writeEpochStream(epochStream: DataFrame, warehouseDir: String,
-      checkpointDir: String) =
-    epochStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append")
-          .partitionBy("subject_id")
-          .parquet(s"$warehouseDir/sleep_epochs_stream")
-      }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, countDistinct, lit, min, spark_partition_id, when}
 
 import graft.{Schemas, SparkSpec}
-import graft.ingest.{JobRunner, SeedData}
+import graft.ingest.{IngestError, JobRunner, SeedData}
 import graft.warehouse.Warehouse
 
 class SleepReadsSpec extends SparkSpec {
@@ -270,5 +270,32 @@ class SleepReadsSpec extends SparkSpec {
     }
     assert(reads.hypnogramFor(99).collect().isEmpty)
     assert(byWindowOnset(99).isEmpty)
+  }
+
+  test("latestErrors returns the newest n error rows, newest first") {
+    import spark.implicits._
+    val d = tmpDir("reads-errors")
+    val wh = new Warehouse(spark, d)
+    // Three error logs, oldest first; each stamps all its rows with one
+    // `occurred_at`, so the subject ids say which log a row came from.
+    Seq(0 until 8, 10 until 13, 20 until 21).foreach(ids =>
+      wh.logErrors(ids.map(IngestError(_, "T", "m", "s")).toDF()))
+    val stamps = wh.readErrors().groupBy("subject_id").agg(min("occurred_at"))
+      .collect().map(r => r.getInt(0) -> r.getTimestamp(1)).toMap
+    assert(stamps(0).before(stamps(10)) && stamps(10).before(stamps(20)))
+
+    val reads = new SleepReads(spark, d)
+    def latest(rows: Array[Row]): Seq[(Int, java.sql.Timestamp)] =
+      rows.toSeq.map(r => (r.getAs[Int]("subject_id"), r.getAs[java.sql.Timestamp]("occurred_at")))
+    val four = latest(reads.latestErrors(4).collect())
+    assert(four.map(_._1).head == 20)
+    assert(four.map(_._1).toSet == Set(20, 10, 11, 12))
+    assert(four.map(_._2) == four.map(_._2).sortBy(-_.getTime))
+    // The default is 10: all of the two newest logs, then 6 of the oldest.
+    val all = latest(reads.latestErrors().collect())
+    assert(all.length == 10)
+    assert(all.map(_._1).take(4).toSet == Set(20, 10, 11, 12))
+    assert(all.drop(4).forall { case (s, _) => s < 8 })
+    assert(all.map(_._2) == all.map(_._2).sortBy(-_.getTime))
   }
 }

@@ -706,100 +706,14 @@ class EdfDataSourceSpec extends SparkSpec {
       .delete(new org.apache.hadoop.fs.Path(s"$out/$squatName"), true)
   }
 
-  test("glob load resolves an in-flight export exactly as a directory load") {
-    // Old state: rec1 v1 only. An export of rec0+rec1 (v2) crashes at
-    // rec0's promotion (first rename), so NOTHING is promoted: rec0 is a
-    // brand-new pending name, rec1 a staged redirect over its v1 final.
-    // A glob reader must see the complete new state — same guarantee the
-    // directory-load specs pin — and pending names must be filtered by
-    // the glob's own file component.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfglob_inflight")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec1"))
-      .write.format("edf").mode("append").save(out)
-    assert(signalView(s"$out/*.edf").keySet.map(_._1) == Set("rec1.edf"),
-      "glob view of the old state")
-    val cleanOut = tmpDir("edfglob_inflight_clean")
-    v2(src).write.format("edf").mode("append").save(cleanOut)
-    val newView = signalView(cleanOut)
-
-    stageAndCrash(out, "glob-inflight", v2(src), "rec0.edf")
-
-    // Complete new state through the glob: staged redirect (rec1) AND
-    // brand-new pending name (rec0) — never a half-promoted mix.
-    assert(signalView(s"$out/*.edf") == newView,
-      "glob reader did not see the in-flight export's complete state")
-    assert(signalView(out) == signalView(s"$out/*.edf"),
-      "glob and directory loads disagree on the same fenced directory")
-    // Pending names must match the pattern's file component: rec0 is
-    // pending-only (no final exists), rec1 has a final that the pattern
-    // rejects — only rec0's staged bytes may surface.
-    assert(signalView(s"$out/rec0*.edf") ==
-      newView.filter(_._1._1 == "rec0.edf"),
-      "pattern-filtered glob lost the pending name it matches")
-    assert(signalView(s"$out/rec1*.edf") ==
-      newView.filter(_._1._1 == "rec1.edf"),
-      "pattern-filtered glob mixed in names it must not serve")
-
-    // Recovery converges both load spellings on the same final state.
-    val promoted = EdfExportRecovery.rollForward(out, hconf)
-    assert(promoted.toSet == Set("rec0.edf", "rec1.edf"), promoted.toString)
-    assert(signalView(s"$out/*.edf") == newView)
-    val names = listOut(out).filterNot(_.startsWith("."))
-    assert(names.toSet == Set("rec0.edf", "rec1.edf"),
-      s"fence residue after recovery: $names")
-  }
-
-  test("glob load serves an export whose matching files are ALL still staged") {
-    // The round-11 hole: an in-flight export into an EMPTY directory has
-    // zero final files matching the glob, so the data glob alone finds
-    // nothing — the fence probe must still surface the committed
-    // (manifest-published) state, exactly as a directory load does.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfglob_pendingonly")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    val cleanOut = tmpDir("edfglob_pendingonly_clean")
-    src.write.format("edf").mode("append").save(cleanOut)
-    val want = signalView(cleanOut)
-
-    stageAndCrash(out, "glob-pending-only", src, "rec0.edf")
-    assert(listOut(out).count(_.toLowerCase.endsWith(".edf")) == 0,
-      "precondition: nothing promoted, the glob alone matches zero files")
-
-    assert(signalView(s"$out/*.edf") == want,
-      "glob reader is blind to a committed export that is still fully staged")
-    assert(signalView(out) == want,
-      "directory reader lost the fully-staged export")
-    // A broad pattern must not plan the commit protocol's own bookkeeping
-    // (the manifest file, the _temporary tree) as EDF data.
-    assert(signalView(s"$out/*") == want,
-      "a broad glob planned fence/staging entries as data")
-    // A pattern matching NEITHER finals nor pending names stays a LOUD
-    // failure — never a silent empty result — whether or not fences are
-    // present, so the outcome cannot flip when fences are cleaned up.
-    intercept[Exception](
-      spark.read.format("edf").load(s"$out/nomatch*.edf").collect())
-
-    val promoted = EdfExportRecovery.rollForward(out, hconf)
-    assert(promoted.toSet == Set("rec0.edf", "rec1.edf"), promoted.toString)
-    assert(signalView(s"$out/*.edf") == want, "rollForward changed glob reads")
-    val names = listOut(out).filterNot(_.startsWith("."))
-    assert(names.toSet == Set("rec0.edf", "rec1.edf"), s"residue: $names")
-  }
-
   test("fence pileup: many crashed exports resolve at every step, then clean up") {
     // ~25 sequential crashed exports into ONE directory (an operator
     // re-running a failing job all night), then one successful commit and
-    // a rollForward. At every step readers — directory AND glob — must
-    // serve exactly the newest export's bytes; the pileup must not
-    // multiply partitions; the final state must carry zero fence files.
+    // a rollForward. At every step readers must serve exactly the newest
+    // export's bytes; the pileup must not multiply partitions; the final
+    // state must carry zero fence files.
     val hconf = spark.sparkContext.hadoopConfiguration
-    val out = tmpDir("edfglob_pileup")
+    val out = tmpDir("edf_pileup")
     val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
       .where(col("path").contains("rec0"))
       .orderBy("path", "channel", "chunk_idx")
@@ -808,7 +722,7 @@ class EdfDataSourceSpec extends SparkSpec {
     // Two alternating content versions, precomputed from clean writes —
     // consecutive steps differ, so a stale-fence win is visible.
     val wantByFactor = Seq(0.5, 0.25).map { f =>
-      val c = tmpDir(s"edfglob_pileup_clean_$f")
+      val c = tmpDir(s"edf_pileup_clean_$f")
       scaled(f).write.format("edf").mode("append").save(c)
       f -> signalView(c)
     }.toMap
@@ -818,23 +732,19 @@ class EdfDataSourceSpec extends SparkSpec {
       stageAndCrash(out, f"pileup-$i%02d", scaled(f), "rec0.edf")
       assert(signalView(out) == wantByFactor(f),
         s"step $i: directory read did not resolve to the newest export")
-      assert(signalView(s"$out/*.edf") == wantByFactor(f),
-        s"step $i: glob read did not resolve to the newest export")
     }
     assert(listOut(out).count(_.startsWith("_STAGED_MANIFEST-")) == steps)
     // 25 manifests all mention rec0.edf: resolution must still plan ONE
     // partition for it, not one per fence.
-    assert(spark.read.format("edf").load(s"$out/*.edf")
-      .rdd.getNumPartitions == 1,
+    assert(spark.read.format("edf").load(out).rdd.getNumPartitions == 1,
       "fence pileup multiplied input partitions")
 
     // One successful export outranks the whole pileup...
-    val cleanOut = tmpDir("edfglob_pileup_final")
+    val cleanOut = tmpDir("edf_pileup_final")
     src.write.format("edf").mode("append").save(cleanOut)
     val want = signalView(cleanOut)
     src.write.format("edf").mode("append").save(out)
     assert(signalView(out) == want, "pileup outlived a successful commit")
-    assert(signalView(s"$out/*.edf") == want)
     // ...and recovery retires every fence and stale staged copy.
     assert(EdfExportRecovery.rollForward(out, hconf).isEmpty,
       "rollForward re-promoted stale crashed exports over committed data")
@@ -842,48 +752,6 @@ class EdfDataSourceSpec extends SparkSpec {
     val names = listOut(out).filterNot(_.startsWith("."))
     assert(names.toSet == Set("rec0.edf"),
       s"fence files or staging survived recovery: $names")
-  }
-
-  test("multi-directory glob: steady-state and fully-staged dirs resolve per parent") {
-    // One glob spanning two directories: `a/` is steady state (committed
-    // finals, zero fences — must pay no fence machinery and serve its
-    // files plainly); `b/` holds an in-flight export whose matching files
-    // are ALL still staged (a fence-only parent the data glob alone
-    // cannot see). The parent component of the pattern is itself a glob,
-    // so the sibling fence probe must expand it.
-    val base = tmpDir("edfglob_multi")
-    val aDir = s"$base/a"; val bDir = s"$base/b"
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec0"))
-      .write.format("edf").mode("append").save(aDir)
-    val cleanB = tmpDir("edfglob_multi_cleanb")
-    v2(src).write.format("edf").mode("append").save(cleanB)
-    stageAndCrash(bDir, "glob-multi", v2(src), "rec0.edf")
-    assert(listOut(bDir).count(_.toLowerCase.endsWith(".edf")) == 0,
-      "precondition: b/ is a fence-only directory for the data glob")
-
-    // View keyed by the last TWO path components (basenames collide
-    // across the two directories).
-    val got = spark.read.format("edf").option("chunk_records", "4")
-      .load(s"$base/*/*.edf")
-      .withColumn("file", concat_ws("/",
-        element_at(split(col("path"), "/"), -2),
-        element_at(split(col("path"), "/"), -1)))
-      .groupBy("file", "channel")
-      .agg(flatten(sort_array(collect_list(struct(col("chunk_idx"),
-        col("samples"))))("samples")).as("sig"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        r.getSeq[Double](r.fieldIndex("sig")))
-      .toMap
-    val want =
-      signalView(aDir).map { case ((f, c), s) => (s"a/$f", c) -> s } ++
-        signalView(cleanB).map { case ((f, c), s) => (s"b/$f", c) -> s }
-    assert(got == want,
-      "multi-directory glob did not resolve each parent independently")
   }
 
   test("hidden output basenames fail loudly and commit nothing") {
@@ -906,104 +774,13 @@ class EdfDataSourceSpec extends SparkSpec {
       s"staging survived the refused commit: ${listOut(out)}")
   }
 
-  test("a glob-matched directory expands to its children with fence resolution") {
-    // Spark's file sources expand a glob-matched directory to its
-    // children; this source must do the same — including the full
-    // commit-protocol resolution for a matched directory whose export is
-    // still entirely staged (its fences live INSIDE it, not beside it).
-    val base = tmpDir("edfglob_dirmatch")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec0"))
-      .write.format("edf").mode("append").save(s"$base/day1")
-    val cleanDay2 = tmpDir("edfglob_dirmatch_clean")
-    v2(src).write.format("edf").mode("append").save(cleanDay2)
-    stageAndCrash(s"$base/day2", "dir-match", v2(src), "rec0.edf")
-
-    val got = spark.read.format("edf").option("chunk_records", "4")
-      .load(s"$base/*")
-      .withColumn("file", concat_ws("/",
-        element_at(split(col("path"), "/"), -2),
-        element_at(split(col("path"), "/"), -1)))
-      .groupBy("file", "channel")
-      .agg(flatten(sort_array(collect_list(struct(col("chunk_idx"),
-        col("samples"))))("samples")).as("sig"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        r.getSeq[Double](r.fieldIndex("sig")))
-      .toMap
-    val want =
-      signalView(s"$base/day1")
-        .map { case ((f, c), s) => (s"day1/$f", c) -> s } ++
-        signalView(cleanDay2)
-          .map { case ((f, c), s) => (s"day2/$f", c) -> s }
-    assert(got == want,
-      "glob-matched directories were not expanded with full resolution")
-    // A brace glob matching BOTH a directory and a file inside it must
-    // not double-read that file: partitions dedup by logical path.
-    // day1 holds one recording: 2 channels x ceil(10/4) chunks = 6 rows.
-    assert(spark.read.format("edf").option("chunk_records", "4")
-      .load(s"$base/{day1,day1/rec0.edf}").count() == 6,
-      "brace glob matching a dir and a file inside it double-read the file")
-  }
-
-  test("a brace-with-slash glob sees a fence-only directory") {
-    // The round-12 blind spot: a slash inside braces breaks the textual
-    // parent/name split, and the old fallback could not discover a
-    // directory visible ONLY through its fences (an export whose matching
-    // files are all still staged). The planner now expands such braces
-    // into alternatives first (the globber's own first step), so each
-    // alternative probes fences under its own parent — day2 below must be
-    // served even though no final file of it matches anything.
-    val base = tmpDir("edfglob_braceslash")
-    val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
-      .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec0"))
-      .write.format("edf").mode("append").save(s"$base/day1")
-    val cleanDay2 = tmpDir("edfglob_braceslash_clean")
-    v2(src).write.format("edf").mode("append").save(cleanDay2)
-    stageAndCrash(s"$base/day2", "brace-slash", v2(src), "rec0.edf")
-    assert(listOut(s"$base/day2").count(_.toLowerCase.endsWith(".edf")) == 0,
-      "precondition: day2 is fence-only for any data glob")
-
-    def twoLevelView(pattern: String) =
-      spark.read.format("edf").option("chunk_records", "4").load(pattern)
-        .withColumn("file", concat_ws("/",
-          element_at(split(col("path"), "/"), -2),
-          element_at(split(col("path"), "/"), -1)))
-        .groupBy("file", "channel")
-        .agg(flatten(sort_array(collect_list(struct(col("chunk_idx"),
-          col("samples"))))("samples")).as("sig"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          r.getSeq[Double](r.fieldIndex("sig")))
-        .toMap
-    val day1View = signalView(s"$base/day1")
-      .map { case ((f, c), s) => (s"day1/$f", c) -> s }
-    val day2View = signalView(cleanDay2)
-      .map { case ((f, c), s) => (s"day2/$f", c) -> s }
-
-    assert(twoLevelView(s"$base/{day1/rec0.edf,day2/*.edf}") ==
-      day1View ++ day2View,
-      "brace-with-slash pattern was blind to the fence-only directory")
-    // Pending names still obey the alternative's OWN name component:
-    // rec0* must surface day2's pending rec0 but not its pending rec1.
-    assert(twoLevelView(s"$base/{day1/rec0.edf,day2/rec0*.edf}") ==
-      day1View ++ day2View.filter(_._1._1 == "day2/rec0.edf"),
-      "pending names leaked past their alternative's name component")
-  }
-
   test("a manifest-mentioned non-edf name stays hidden from directory loads") {
     // The steady-state listing only serves *.edf; a pending
     // (mentioned-but-unlisted) name must pass the same gate, or an
     // in-flight export would surface files the committed state hides.
     // Our own writer normalizes basenames to *.edf, so a non-edf mention
     // can only come from a hand-made/foreign manifest — plant one.
-    val out = tmpDir("edfglob_nonedf")
+    val out = tmpDir("edf_nonedf")
     val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
       .where(col("path").contains("rec0"))
       .orderBy("path", "channel", "chunk_idx")
@@ -1021,123 +798,52 @@ class EdfDataSourceSpec extends SparkSpec {
         s"${staging.resolve("rec1.edf")}\trec1.edf\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // The pending *.edf name is served from staging; the non-edf name is
-    // hidden from directory AND *.edf-glob loads, exactly as the
-    // steady-state listing would hide its final file.
+    // hidden from directory loads, exactly as the steady-state listing
+    // would hide its final file.
     val wantWithRec1 = want ++ want.map { case ((_, ch), sig) =>
       ("rec1.edf", ch) -> sig
     }
     assert(signalView(out) == wantWithRec1,
       "directory load served (or lost) a pending name inconsistently")
-    assert(signalView(s"$out/*.edf") == wantWithRec1,
-      "glob load disagrees with the directory load under a foreign manifest")
     assert(!spark.read.format("edf").load(out).select("path").distinct()
       .collect().map(_.getString(0)).exists(_.endsWith("weird.bin")),
       "pending non-edf name leaked into a directory load")
   }
 
-  test("multi-path load unions per-path plans with full fence resolution") {
-    // `load(a, b, …)` arrives as a JSON-encoded `paths` array (Spark's
-    // DataFrameReader convention). It must plan the UNION of the
-    // per-path plans — including commit-protocol resolution for a path
-    // whose export is still entirely staged — dedup a file reachable
-    // through two specs by logical path, and keep ONE typo'd member a
-    // loud failure instead of a silently thinner result.
-    val base = tmpDir("edfmulti")
-    val aDir = s"$base/a"; val bDir = s"$base/b"
+  test("a file load resolves its directory's fences like a directory load") {
+    // Old state: rec1 v1 only. An export of rec0+rec1 (v2) crashes at
+    // rec0's promotion (first rename), so NOTHING is promoted: rec0 is a
+    // brand-new pending name, rec1 a staged redirect over its v1 final.
+    // A load of either file must serve that file's new bytes, exactly as
+    // the directory load does, and nothing else.
+    val out = tmpDir("edf_fileload")
     val src = spark.read.format("edf").option("chunk_records", "4").load(dir)
       .orderBy("path", "channel", "chunk_idx")
-    def v2(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("samples", transform(col("samples"), x => x * 0.5))
-    src.where(col("path").contains("rec0"))
-      .write.format("edf").mode("append").save(aDir)
-    val cleanB = tmpDir("edfmulti_cleanb")
-    v2(src).write.format("edf").mode("append").save(cleanB)
-    stageAndCrash(bDir, "multi-path", v2(src), "rec0.edf")
-    assert(listOut(bDir).count(_.toLowerCase.endsWith(".edf")) == 0,
-      "precondition: b/ is fully staged")
-
-    def twoLevelView(paths: String*) =
-      spark.read.format("edf").option("chunk_records", "4")
-        .load(paths: _*)
-        .withColumn("file", concat_ws("/",
-          element_at(split(col("path"), "/"), -2),
-          element_at(split(col("path"), "/"), -1)))
-        .groupBy("file", "channel")
-        .agg(flatten(sort_array(collect_list(struct(col("chunk_idx"),
-          col("samples"))))("samples")).as("sig"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          r.getSeq[Double](r.fieldIndex("sig")))
-        .toMap
-    val want =
-      signalView(aDir).map { case ((f, c), s) => (s"a/$f", c) -> s } ++
-        signalView(cleanB).map { case ((f, c), s) => (s"b/$f", c) -> s }
-    assert(twoLevelView(aDir, bDir) == want,
-      "multi-path load did not union per-path plans with fence resolution")
-    // A dir spec + a glob spec over the same files: dedup by logical
-    // path, not a double-read.
-    assert(twoLevelView(aDir, s"$aDir/*.edf") ==
-      want.filter(_._1._1.startsWith("a/")),
-      "overlapping multi-path specs double-read or lost files")
-    // One bad member fails the whole read loudly.
-    intercept[Exception](
-      spark.read.format("edf").load(aDir, s"$base/nope*.edf").collect())
-  }
-
-  test("paths option parsing is strict; degenerate values stay loud") {
-    // Strictly a whole JSON array of strings, or — for a value that
-    // does not even LOOK like an array — ONE literal path. A value that
-    // starts with '[' but is not a JSON string array throws HERE,
-    // naming the option (matching Spark's getPaths, which throws on
-    // malformed paths JSON): Jackson's lenient defaults would silently
-    // mangle a character-class glob like [12]rec0.edf into the literal
-    // path "12", and a silent literal fallback would surface later as
-    // a baffling file-not-found on the raw JSON string.
-    assert(EdfDataSource.parsePaths("""["a","b"]""") == Seq("a", "b"))
-    assert(EdfDataSource.parsePaths("plain/dir") == Seq("plain/dir"))
-    assert(EdfDataSource.parsePaths("[]") == Seq.empty)
-    // Array-looking but malformed → IllegalArgumentException naming
-    // 'paths' and pointing at the 'path' escape hatch for globs.
-    Seq("[12]rec0.edf", // trailing tokens after a valid JSON array
-        "[12]",         // array, but not of strings
-        """["a",12]""", // mixed element types
-        """["a","b" """ // unterminated
-    ).foreach { v =>
-      val e = intercept[IllegalArgumentException](
-        EdfDataSource.parsePaths(v))
-      assert(e.getMessage.contains("'paths'") &&
-        e.getMessage.contains("'path'"), s"$v: ${e.getMessage}")
+    src.where(col("path").contains("rec1"))
+      .write.format("edf").mode("append").save(out)
+    val v2 = src.withColumn("samples", transform(col("samples"), x => x * 0.5))
+    val cleanOut = tmpDir("edf_fileload_clean")
+    v2.write.format("edf").mode("append").save(cleanOut)
+    val newView = signalView(cleanOut)
+    stageAndCrash(out, "file-load", v2, "rec0.edf")
+    assert(signalView(out) == newView,
+      "directory reader did not see the in-flight export's complete state")
+    Seq("rec0.edf", "rec1.edf").foreach { n =>
+      assert(signalView(s"$out/$n") == newView.filter(_._1._1 == n),
+        s"file load of $n disagrees with the directory load")
     }
-    // ...and the same failure is loud end-to-end at plan time.
-    val bad = intercept[Exception](
-      spark.read.format("edf").option("paths", "[12]rec0.edf").load()
-        .collect())
-    assert(msgs(bad).exists(_.contains("'paths'")), bad.toString)
-    // A hand-set empty array must stay the loud no-path error, never a
-    // silent empty scan.
-    val e = intercept[Exception](
-      spark.read.format("edf").option("paths", "[]").load().collect())
-    assert(msgs(e).exists(_.contains("no path given")), e.toString)
-    // `path` and `paths` UNION (Spark's file-source getPaths rule) —
-    // neither silently drops the other.
-    import org.apache.spark.sql.connector.catalog.SupportsRead
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    val parts = new EdfDataSource()
-      .getTable(EdfDataSource.Schema, Array.empty,
-        java.util.Map.of("path", s"$dir/rec0.edf",
-          "paths", s"""["$dir/rec1.edf"]"""))
-      .asInstanceOf[SupportsRead]
-      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-      .toBatch.planInputPartitions()
-    assert(parts.length == 2, s"path ++ paths union planned ${parts.length}")
+    // A multi-path load is refused, never read in part.
+    val e = intercept[Exception](spark.read.format("edf")
+      .load(s"$out/rec0.edf", s"$out/rec1.edf").collect())
+    assert(msgs(e).exists(_.contains("one directory or file")), e.toString)
   }
 
   test("a pushed path filter cannot prune the loud no-match partition") {
-    // A typo'd pattern must fail the read even when a path predicate is
+    // A typo'd path must fail the read even when a path predicate is
     // pushed down — pruning the loud partition would silently turn the
     // guaranteed failure into an empty result.
     val e = intercept[Exception](
-      spark.read.format("edf").load(s"$dir/nomatch*.edf")
+      spark.read.format("edf").load(s"$dir/nomatch.edf")
         .where(col("path") === s"$dir/rec0.edf").collect())
     assert(msgs(e).exists(m => m.contains("nomatch") ||
       m.toLowerCase.contains("not exist") ||
